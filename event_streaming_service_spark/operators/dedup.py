@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from event_streaming_service_spark.operators.hints import (
-    gated_broadcast_rows)
+    gated_broadcast_rows, local_max_pairs)
 from event_streaming_service_spark.operators.text import (
     fan_out,
     shingles_from_tokens,
@@ -383,9 +383,13 @@ def _cc_union_find(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
     union-find inside mapInPandas (no driver collect — guide §5 —
     and no barrier rounds at all, guide §1.2). The caller gates on
     the pair count; a single task over <=200k pairs is milliseconds.
-    Output matches the propagation loop row for row: (node,
-    component), component = smallest node id reachable."""
+    Output matches the propagation loop row for row on NULL-free
+    pairs: (node, component), component = smallest node id
+    reachable. Pairs with a NULL endpoint are dropped."""
     id_t = pairs.schema[a_col].dataType.simpleString()
+    # a NULL id is no node: pandas would turn the whole id column into
+    # floats and the union-find would key NaNs that never compare equal
+    pairs = pairs.filter(F.col(a_col).isNotNull() & F.col(b_col).isNotNull())
 
     def run(batches):
         import pandas as pd
@@ -473,8 +477,8 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     cores than 32). The driver loop only carries COUNTS, never rows.
 
     SMALL-GRAPH FAST PATH (r13, guide §1.2): LSH/semantic pair lists
-    are duplicate-bounded, and below
-    `spark.graft.cc.localMaxPairs` (default 200k) the whole fixpoint
+    are duplicate-bounded, and at or below `hints.local_max_pairs`
+    (`spark.graft.cc.localMaxPairs`, default 200k) the whole fixpoint
     collapses into ONE executor-side pass — a single-task
     union-find over the pinned pair list (exact min-label
     components, no driver collect, no barrier rounds at all). The
@@ -491,13 +495,7 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     # verify stage re-running inside the edge-cache build).
     pairs = pairs.select(F.col(a_col), F.col(b_col)).localCheckpoint()
     n_pairs = pairs.count()
-    spark = pairs.sparkSession
-    try:
-        local_cap = int(spark.conf.get("spark.graft.cc.localMaxPairs",
-                                       "200000"))
-    except Exception:
-        local_cap = 200_000
-    if n_pairs <= local_cap:
+    if n_pairs <= local_max_pairs(pairs.sparkSession):
         labels = _cc_union_find(pairs, a_col, b_col)
         if stats_out is not None:
             # exact count would cost a job; consumers only gate

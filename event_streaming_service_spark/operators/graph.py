@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from event_streaming_service_spark.operators.hints import (
-    gated_broadcast_rows)
+    gated_broadcast_rows, local_max_pairs)
 
 # Packed-pair radix: (u, v) pairs ride hash aggregates / anti-joins /
 # top-k as ONE bigint u * _PACK + v. Ids must stay below 2^31 so the
@@ -379,8 +379,7 @@ def adamic_adar_links(edges: DataFrame, top_n: int = 20,
 
 
 def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 6,
-               a_col: str = "a", b_col: str = "b",
-               broadcast_keep: bool = False) -> DataFrame:
+               a_col: str = "a", b_col: str = "b") -> DataFrame:
     """k-core membership by EXACTLY `rounds` peeling rounds: each
     round drops nodes of degree < k and the edges touching them.
     Peeling is monotone, so once a round changes nothing every later
@@ -393,43 +392,36 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 6,
 
     Returns (node, deg_in_core) for surviving nodes.
 
-    Plan shape for 100 TB: per round one degree aggregate plus two
-    semi-joins on the shrinking adjacency, each round
-    localCheckpoint-ed (the near_dup_clusters convention) — adj
-    feeds THREE consumers per round (the degree agg and both semi-
-    join probes), so a lazy plan re-derives the previous round 3x
-    per level: 3^rounds expansion, observed as an OOM at rounds=6
-    on the vanilla driver heap. Checkpointing bounds every round to
-    one shuffle set over the shrinking adjacency. Production picks
-    `rounds` ~ O(log n) for real degree distributions; a
-    pathological chain needs O(n) rounds.
-
-    broadcast_keep=True pins the node-grain survivor set to the
-    broadcast side of both per-round semi-joins (the hits
-    broadcast_scores device) so the checkpointed adjacency never
-    re-shuffles inside a round; leave False for cluster-scale node
-    sets. Each round's checkpoint is LAZY and the early-exit count is
-    the action that materializes it — one barrier job per round
-    instead of the former eager-checkpoint + count pair (r13, guide
-    §1.2: at sf0.1 the round count, not the data, is the cost)."""
+    Plan shape: the symmetrized adjacency (w, n) is pinned by a lazy
+    localCheckpoint whose count materializes it, and that count picks
+    the path. At most `hints.local_max_pairs` pairs (count / 2): all
+    rounds run in ONE task (`_kcore_local`, coalesce(1) + numpy
+    degree peeling in mapInPandas, no driver collect), because on a
+    small graph the per-round barrier jobs, not the data, are the
+    cost. Above the gate, one job per round: a degree aggregate and
+    two semi-joins on the shrinking adjacency, ending in a lazy
+    localCheckpoint that the round's edge count materializes (adj
+    feeds three consumers per round, so an unpinned plan re-derives
+    every level 3x). The survivor set joins as the broadcast side
+    under the row gate, the adjacency count bounding the node count.
+    Both paths stop at the fixpoint: a round that drops no edge
+    leaves every later round a no-op."""
     und = (edges.select(F.col(a_col).alias("x"),
                         F.col(b_col).alias("y")).distinct())
     adj = (und.select(F.col("x").alias("w"), F.col("y").alias("n"))
            .union(und.select(F.col("y").alias("w"),
                              F.col("x").alias("n")))
            ).localCheckpoint(eager=False)
-    # early exit at the fixpoint: a round that drops no edge proves
-    # every node kept its degree, so all remaining rounds are no-ops
-    # and skipping them cannot change the result. The count doubles as
-    # the checkpoint's materializing action (one job), then reads
-    # cached partitions.
     n_edges = adj.count()
+    # rounds=0 keeps the loop: its one aggregate also reports a NULL node
+    if rounds > 0 and n_edges // 2 <= local_max_pairs(adj.sparkSession):
+        return _kcore_local(adj, k, rounds)
     for _ in range(rounds):
         keep = (adj.groupBy("w")
                 .agg(F.count(F.lit(1)).alias("deg"))
                 .filter(F.col("deg") >= k)
                 .select("w"))
-        keep = _bc(keep, broadcast_keep)
+        keep = gated_broadcast_rows(keep, n_edges, 8)
         adj = (adj
                .join(keep, "w", "left_semi")
                .join(keep.select(F.col("w").alias("n")), "n",
@@ -442,9 +434,62 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 6,
             .agg(F.count(F.lit(1)).alias("deg_in_core")))
 
 
+def _run_local(adj: DataFrame, key: str, other: str, kernel,
+               schema: str) -> DataFrame:
+    """Run `kernel(src, dst, ids, dead) -> pandas.DataFrame` once over
+    a small pinned adjacency (key, other) in ONE task (coalesce(1) +
+    mapInPandas, no driver collect). src/dst are dense codes into the
+    `ids` array. Rows with a NULL `key` go (the loop's key-grained
+    joins never match them); a NULL `other` becomes the row's own key
+    with `dead` set, so pandas keeps integer ids and the row can still
+    count toward the key's degree without being a neighbour. Worker
+    closures stay self-contained: nothing here is pickled by
+    reference."""
+    def run(batches):
+        import numpy as np
+        import pandas as pd
+
+        frames = list(batches)
+        pdf = pd.concat(frames, ignore_index=True) if frames else None
+        if pdf is None or pdf.empty:
+            return
+        codes, ids = pd.factorize(np.concatenate(
+            [pdf[key].to_numpy(), pdf[other].to_numpy()]))
+        m = len(pdf)
+        yield kernel(codes[:m], codes[m:], ids, pdf["dead"].to_numpy())
+
+    return (adj.filter(F.col(key).isNotNull())
+            .select(key, F.coalesce(other, key).alias(other),
+                    F.col(other).isNull().alias("dead"))
+            .coalesce(1)
+            .mapInPandas(run, schema))
+
+
+def _kcore_local(adj: DataFrame, k: int, rounds: int) -> DataFrame:
+    """`kcore_peel`'s rounds over a small pinned adjacency (w, n) in
+    one task, row for row the loop's result."""
+    def peel(w, n, ids, dead):
+        import numpy as np
+        import pandas as pd
+
+        live = ~dead
+        for _ in range(rounds):
+            keep = np.bincount(w, minlength=len(ids)) >= k
+            nxt = keep[w] & keep[n] & live
+            if nxt.all():
+                break
+            w, n, live = w[nxt], n[nxt], live[nxt]
+        deg = np.bincount(w, minlength=len(ids))
+        alive = np.flatnonzero(deg)
+        return pd.DataFrame({"node": ids[alive], "deg_in_core": deg[alive]})
+
+    id_t = adj.schema["w"].dataType.simpleString()
+    return _run_local(adj, "w", "n", peel,
+                      f"node {id_t}, deg_in_core bigint")
+
+
 def wl_roles(edges: DataFrame, rounds: int = 2,
-             a_col: str = "a", b_col: str = "b",
-             broadcast_hashes: bool = False) -> DataFrame:
+             a_col: str = "a", b_col: str = "b") -> DataFrame:
     """Weisfeiler-Leman node role hashing (the 1-WL color refinement
     behind graph-isomorphism tests and WL graph kernels,
     Weisfeiler & Leman 1968; Shervashidze et al., JMLR 2011): start
@@ -461,31 +506,31 @@ def wl_roles(edges: DataFrame, rounds: int = 2,
 
     Returns (node, deg, wl_role) with node named after a_col.
 
-    Scale shape: one shuffle per round — join the neighbor's current
-    hash onto the adjacency (node-keyed build side) and re-aggregate
-    the sorted list per node; both hash on the node key, so the
-    exchange is reused. The collect_list per node is degree-bounded —
-    a 1e6-degree hub makes a 32 MB label list, the same hub hazard
-    adamic_adar_links caps; production would cap or sample neighbor
-    multisets per center the same way.
-
-    broadcast_hashes=True pins the node-grain hash frame to the
-    broadcast side of the per-round adjacency join (the hits
-    broadcast_scores device) so the cached adjacency never re-shuffles
-    per round; leave False for cluster-scale node sets. Each round's
-    hash frame persists (r13): it feeds BOTH the next round's
-    neighbor-list build and the relabel join, and without the pin the
-    whole previous round re-evaluates once per consumer — 2x plan
-    growth per round (guide §2.4)."""
+    Plan shape: the symmetrized adjacency is pinned by a lazy
+    localCheckpoint whose count materializes it, and that count picks
+    the path. At most `hints.local_max_pairs` pairs (count / 2): all
+    rounds run in ONE task (`_wl_local`, coalesce(1) + pandas/hashlib
+    in mapInPandas, no driver collect). Above the gate, one shuffle per
+    round: join the neighbour's current hash onto the adjacency and
+    re-aggregate the sorted list per node; both hash on the node key,
+    so the exchange is reused. The node-grain hash frame joins as the
+    broadcast side under the row gate (the adjacency count bounds the
+    node count) and persists each round, since it feeds both the
+    neighbour-list build and the relabel join. The collect_list per
+    node is degree-bounded — a 1e6-degree hub makes a 32 MB label
+    list, the hub hazard adamic_adar_links caps."""
     fwd = edges.select(F.col(a_col).alias("n"), F.col(b_col).alias("m"))
     adj = (fwd.unionByName(fwd.select(F.col("m").alias("n"),
                                       F.col("n").alias("m")))
-           .persist())
+           .localCheckpoint(eager=False))
+    n_adj = adj.count()
+    if n_adj // 2 <= local_max_pairs(adj.sparkSession):
+        return _wl_local(adj, rounds, a_col)
     deg = adj.groupBy("n").agg(F.count(F.lit(1)).alias("deg"))
     h = deg.select("n", F.lpad(F.col("deg").cast("string"), 8, "0")
                    .alias("h")).persist()
     for _ in range(rounds):
-        hb = _bc(h, broadcast_hashes)
+        hb = gated_broadcast_rows(h, n_adj, 48)
         nb = (adj.join(hb.select(F.col("n").alias("m"),
                                  F.col("h").alias("hm")), "m")
               .groupBy("n")
@@ -498,6 +543,38 @@ def wl_roles(edges: DataFrame, rounds: int = 2,
             .select(F.col("n").alias(a_col),
                     F.col("deg").cast("bigint").alias("deg"),
                     F.col("h").alias("wl_role")))
+
+
+def _wl_local(adj: DataFrame, rounds: int, a_col: str) -> DataFrame:
+    """`wl_roles`' rounds over a small pinned adjacency (n, m) in one
+    task, row for row the loop's result: a NULL neighbour counts in
+    the degree but not in the label list, and a node whose only
+    neighbours are NULL leaves the result after the first round, as
+    the loop's inner joins drop it."""
+    def refine(n, m, ids, dead):
+        import hashlib
+
+        import numpy as np
+        import pandas as pd
+
+        deg = np.bincount(n, minlength=len(ids))
+        h = np.array([f"{d:08d}"[:8] for d in deg], dtype=object)
+        n, m = n[~dead], m[~dead]
+        out = np.arange(len(ids))
+        for _ in range(rounds):
+            nbs = (pd.DataFrame({"n": n, "hm": h[m]})
+                   .sort_values(["n", "hm"])
+                   .groupby("n")["hm"].agg(",".join))
+            out = nbs.index.to_numpy()
+            h = h.copy()
+            h[out] = [hashlib.md5(f"{a}:{b}".encode()).hexdigest()
+                      for a, b in zip(h[out], nbs.to_numpy())]
+        return pd.DataFrame({a_col: ids[out], "deg": deg[out],
+                             "wl_role": h[out]})
+
+    id_t = adj.schema["n"].dataType.simpleString()
+    return _run_local(adj, "n", "m", refine,
+                      f"{a_col} {id_t}, deg bigint, wl_role string")
 
 
 HITS_SCALE = 1_000_000_000

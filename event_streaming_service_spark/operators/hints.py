@@ -33,7 +33,7 @@ audit signed off on. The cap is parameterised for cluster deployments
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # Per-row framing overhead charged on top of payload bytes when a gate
@@ -41,6 +41,11 @@ from pyspark.sql import functions as F
 ROW_OVERHEAD_BYTES = 48
 
 _DEFAULT_MAX_BYTES = 128 * 1024 * 1024
+
+# Local-path gate in pairs (undirected edges). The ceiling bounds the one
+# task's memory: the kernels hold a few numpy/dict entries per adjacency row.
+_DEFAULT_LOCAL_MAX_PAIRS = 200_000
+_LOCAL_MAX_PAIRS_CEIL = 2_000_000
 
 
 def broadcast_cap_bytes(df: DataFrame) -> int:
@@ -50,6 +55,22 @@ def broadcast_cap_bytes(df: DataFrame) -> int:
             "spark.graft.broadcast.maxBytes", str(_DEFAULT_MAX_BYTES)))
     except Exception:
         return _DEFAULT_MAX_BYTES
+
+
+def local_max_pairs(spark: SparkSession) -> int:
+    """The single-task local-path gate of the graph fixpoints
+    (connected components, k-core, WL): a graph of at most this many
+    pairs runs in one executor task instead of one barrier job per
+    round. `spark.graft.cc.localMaxPairs`, clamped to
+    [0, _LOCAL_MAX_PAIRS_CEIL] so a typo can never route a cluster-size
+    graph into one task; a non-numeric value falls back to the default."""
+    raw = spark.conf.get("spark.graft.cc.localMaxPairs",
+                         str(_DEFAULT_LOCAL_MAX_PAIRS))
+    try:
+        cap = int(raw)
+    except (TypeError, ValueError):
+        return _DEFAULT_LOCAL_MAX_PAIRS
+    return min(max(cap, 0), _LOCAL_MAX_PAIRS_CEIL)
 
 
 def plan_bytes(df: DataFrame) -> int:

@@ -303,11 +303,8 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds (fixed-round semantics unrolled identically in the oracle;
     a no-op past the fixpoint) — surviving nodes with their in-core
     degree (operators/graph.py:kcore_peel)."""
-    part = tables.load_table(spark, sf_dir, "part")
-    bc = plan_bytes(part) <= broadcast_cap_bytes(part)
     return graph.kcore_peel(
-        copurchase_edges(spark, sf_dir, "a", "b"), k=80, rounds=6,
-        broadcast_keep=bc)
+        copurchase_edges(spark, sf_dir, "a", "b"), k=80, rounds=6)
 
 
 _PPR_SEEDS = ("c1", "c2", "c3")
@@ -473,13 +470,7 @@ def q_wl_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
     role have isomorphic 2-hop label trees. The oracle unrolls both
     rounds with the identical string algebra (md5, binary string
     sorts, zero-padded degree seeds are engine-identical)."""
-    # the node set is the PART dimension — derive the per-round
-    # broadcast flag from its scan stats, never a constant True
-    # (the hits_trade_hubs device, r13)
-    part = tables.load_table(spark, sf_dir, "part")
-    bc = plan_bytes(part) <= broadcast_cap_bytes(part)
-    return (graph.wl_roles(copurchase_edges(spark, sf_dir, "a", "b"),
-                           broadcast_hashes=bc)
+    return (graph.wl_roles(copurchase_edges(spark, sf_dir, "a", "b"))
             .withColumnRenamed("a", "l_partkey"))
 
 
