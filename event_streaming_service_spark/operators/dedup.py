@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from event_streaming_service_spark.operators.graph import run_local
 from event_streaming_service_spark.operators.hints import (
     gated_broadcast_rows, local_max_pairs)
 from event_streaming_service_spark.operators.text import (
@@ -377,58 +378,41 @@ def minhash_near_dups(docs: DataFrame, threshold: float,
     )
 
 
-def _cc_union_find(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
+def _cc_local(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
     """Exact min-label connected components of a SMALL pinned pair
-    list in one executor-side pass: coalesce(1) + a path-compressing
-    union-find inside mapInPandas (no driver collect — guide §5 —
-    and no barrier rounds at all, guide §1.2). The caller gates on
-    the pair count; a single task over <=200k pairs is milliseconds.
-    Output matches the propagation loop row for row on NULL-free
-    pairs: (node, component), component = smallest node id
-    reachable. Pairs with a NULL endpoint are dropped."""
-    id_t = pairs.schema[a_col].dataType.simpleString()
-    # a NULL id is no node: pandas would turn the whole id column into
-    # floats and the union-find would key NaNs that never compare equal
-    pairs = pairs.filter(F.col(a_col).isNotNull() & F.col(b_col).isNotNull())
-
-    def run(batches):
+    list in one task (`graph.run_local`: no driver collect, no barrier
+    rounds): vectorised min-label hooking of each star's root onto the
+    smallest neighbouring label, then pointer jumping until every node
+    points at its root, repeated until no root moves. Each round at
+    least halves the stars of a component. Labels are ranks in id
+    order, so a component's label is its smallest node id: (node,
+    component), row for row the propagation loop's result on NULL-free
+    pairs. Pairs with a NULL endpoint are dropped."""
+    def components(a, b, ids, dead):
+        import numpy as np
         import pandas as pd
 
-        parent: dict = {}
+        order = np.argsort(ids, kind="stable")
+        rank = np.empty(len(ids), dtype=np.int64)
+        rank[order] = np.arange(len(ids))
+        x, y = rank[a[~dead]], rank[b[~dead]]
+        lab = np.arange(len(ids))
+        while True:
+            nxt = lab.copy()
+            np.minimum.at(nxt, lab[x], lab[y])
+            np.minimum.at(nxt, lab[y], lab[x])
+            while not np.array_equal(nxt[nxt], nxt):
+                nxt = nxt[nxt]
+            if np.array_equal(nxt, lab):
+                break
+            lab = nxt
+        nodes = np.unique(np.concatenate([x, y]))
+        return pd.DataFrame({"node": ids[order[nodes]],
+                             "component": ids[order[lab[nodes]]]})
 
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        for pdf in batches:
-            for a, b in zip(pdf[a_col], pdf[b_col]):
-                if a not in parent:
-                    parent[a] = a
-                if b not in parent:
-                    parent[b] = b
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[rb] = ra
-        if not parent:
-            return
-        comp_min: dict = {}
-        for n in parent:
-            r = find(n)
-            m = comp_min.get(r)
-            if m is None or n < m:
-                comp_min[r] = n
-        nodes = sorted(parent)
-        yield pd.DataFrame({
-            "node": nodes,
-            "component": [comp_min[find(n)] for n in nodes]})
-
-    return (pairs.coalesce(1)
-            .mapInPandas(run, f"node {id_t}, component {id_t}")
-            .localCheckpoint())
+    id_t = pairs.schema[a_col].dataType.simpleString()
+    return run_local(pairs, a_col, b_col, components,
+                     f"node {id_t}, component {id_t}").localCheckpoint()
 
 
 def connected_components(pairs: DataFrame, a_col: str = "doc_a",
@@ -479,12 +463,12 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     SMALL-GRAPH FAST PATH (r13, guide §1.2): LSH/semantic pair lists
     are duplicate-bounded, and at or below `hints.local_max_pairs`
     (`spark.graft.cc.localMaxPairs`, default 200k) the whole fixpoint
-    collapses into ONE executor-side pass — a single-task
-    union-find over the pinned pair list (exact min-label
-    components, no driver collect, no barrier rounds at all). The
-    pinned pair count is known anyway (it gates the path), so the
-    decision costs one near-free cached count. Above the threshold
-    the loop below is the scale path.
+    collapses into ONE executor-side pass — `_cc_local`, numpy
+    min-label hooking and pointer jumping over the pinned pair list
+    (exact min-label components, no driver collect, no barrier
+    rounds at all). The pinned pair count is known anyway (it gates
+    the path), so the decision costs one near-free cached count.
+    Above the threshold the loop below is the scale path.
     """
     # The symmetrization consumes `pairs` TWICE (one leg per
     # direction), and building the edge cache evaluates both legs in
@@ -496,11 +480,11 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     pairs = pairs.select(F.col(a_col), F.col(b_col)).localCheckpoint()
     n_pairs = pairs.count()
     if n_pairs <= local_max_pairs(pairs.sparkSession):
-        labels = _cc_union_find(pairs, a_col, b_col)
+        labels = _cc_local(pairs, a_col, b_col)
         if stats_out is not None:
             # exact count would cost a job; consumers only gate
             # broadcasts on it, so the 2-per-pair upper bound is fine
-            stats_out["n_nodes"] = 2 * n_pairs
+            stats_out["n_nodes_max"] = 2 * n_pairs
         return labels
     edges = (pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
              .union(pairs.select(F.col(b_col).alias("src"),
@@ -561,7 +545,7 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
             break
     edges.unpersist()
     if stats_out is not None:
-        stats_out["n_nodes"] = n_nodes
+        stats_out["n_nodes_max"] = n_nodes
     return labels
 
 
@@ -588,7 +572,7 @@ def near_dup_clusters(docs: DataFrame, threshold: float,
     comp = connected_components(pairs, stats_out=cc_stats).cache()
     if stats_out is not None:
         stats_out.update(cc_stats)
-    n_members = cc_stats.get("n_nodes")
+    n_members = cc_stats.get("n_nodes_max")
     # cluster sizes > 1 exist only inside the component frame, so
     # derive them there and broadcast — a count-over-window on the
     # full corpus would shuffle every doc row just to label singletons

@@ -1,8 +1,6 @@
-"""Iterative graph analytics: PageRank in exact integer arithmetic —
-the third iterative operator in the engine (after dedup.py's
-connected-components label propagation and similarity.py's Lloyd
-k-means), covering the score-propagation family (influence ranking,
-importance-weighted sampling of linked corpora).
+"""Iterative graph analytics: exact-integer PageRank and HITS,
+deterministic label propagation, k-core peeling and WL roles, plus the
+triangle and Adamic-Adar motif statistics.
 
 Exactness device: ranks live as integer NANO-units. One update is
 
@@ -21,12 +19,12 @@ decimal(38,0) with the floored quotient computed as
 division result is integer-valued, so the engine's scale-6 decimal
 quotient is representable exactly).
 
-Scale: one hash-join + aggregate per iteration (edges x ranks on the
-src key, re-aggregated on dst); the edge table is the only large
-operand and is never mutated, so a real deployment caches it and the
-per-iteration shuffle is rank-table-sized. Iterations are a fixed
-small k (PageRank converges geometrically; k=5-20 is the production
-norm), so lineage stays shallow — no checkpoint needed.
+Broadcasts: every fixpoint counts its pinned node (or adjacency)
+frame once and joins its node-grain frames through
+`hints.gated_broadcast_rows` with that count — one size gate, no
+per-call flag. Below `hints.local_max_pairs`, k-core, WL and
+dedup.py's connected components run all their rounds in one task
+through `run_local`.
 """
 
 from __future__ import annotations
@@ -46,13 +44,15 @@ _PACK_MAX_ID = 1 << 31
 TELEPORT_NANO = 150_000_000      # floor(0.15 * 1e9)
 INIT_NANO = 1_000_000_000        # unnormalized start mass per node
 
+# Gate payload per row of a node-grain frame: a short string id plus a
+# bigint or decimal(38,0) score.
+_NODE_PAYLOAD = 48
+
 
 def pagerank(edges: DataFrame, iterations: int = 5,
              damping_num: int = 85, damping_den: int = 100,
              src_col: str = "src", dst_col: str = "dst",
              decimal: bool = False,
-             materialize: bool = False,
-             broadcast_ranks: bool = False,
              seeds: list | None = None) -> DataFrame:
     """Integer-exact PageRank over a directed edge list (callers union
     reversed edges for the undirected form). Returns (node, rank_nano)
@@ -65,19 +65,11 @@ def pagerank(edges: DataFrame, iterations: int = 5,
     range, and the column type is the only schema difference.
 
     Caching lifecycle: the edge+degree operand and the node list are
-    cached for the duration of the iterations and — because the result
-    is lazy — stay cached until the caller drops them
-    (spark.catalog.clearCache(), session end). Long-lived drivers that
-    invoke pagerank repeatedly should pass materialize=True: the final
-    ranks are eagerly localCheckpoint-ed (small: one row per node) and
-    the two cached operands are unpersisted before returning.
-
-    broadcast_ranks=True pins the per-iteration rank table (and the
-    contribution aggregate) to the broadcast side of its joins — the
-    right plan whenever the NODE set fits an executor (the edge table
-    never re-shuffles; post-aggregate size estimates are too opaque
-    for AQE to pick this up on its own). Leave False for graphs whose
-    node set itself is cluster-scale.
+    cached and — because the result is lazy — stay cached until the
+    caller drops them (spark.catalog.clearCache(), session end). The
+    node count taken on the cache gates the per-iteration rank table
+    and contribution aggregate onto the broadcast side of their joins,
+    so the edge table never re-shuffles while the node set fits.
 
     seeds=[...] switches to PERSONALIZED PageRank: start mass and the
     per-update teleport land only on the seed node literals instead of
@@ -97,6 +89,7 @@ def pagerank(edges: DataFrame, iterations: int = 5,
     nodes = (e.select(F.col("src").alias("node"))
              .unionByName(e.select(F.col("dst").alias("node")))
              .distinct().cache())
+    n_nodes = nodes.count()
     rank_t = "decimal(38,0)" if decimal else "bigint"
     if seeds is None:
         teleport = F.lit(TELEPORT_NANO)
@@ -122,14 +115,14 @@ def pagerank(edges: DataFrame, iterations: int = 5,
         else:
             quot = F.floor(F.col("rank_nano") * F.lit(damping_num)
                            / (F.lit(damping_den) * F.col("__deg")))
-        r = F.broadcast(ranks) if broadcast_ranks else ranks
+        r = gated_broadcast_rows(ranks, n_nodes, _NODE_PAYLOAD)
         contrib = (e
                    .join(r, e.src == r.node)
                    .select(F.col("dst").alias("node"),
                            quot.alias("__c")))
-        agg = contrib.groupBy("node").agg(F.sum("__c").alias("__in"))
-        if broadcast_ranks:
-            agg = F.broadcast(agg)
+        agg = gated_broadcast_rows(
+            contrib.groupBy("node").agg(F.sum("__c").alias("__in")),
+            n_nodes, _NODE_PAYLOAD)
         ranks = (nodes
                  .join(agg, "node", "left")
                  .select("node",
@@ -137,11 +130,6 @@ def pagerank(edges: DataFrame, iterations: int = 5,
                           + F.coalesce(F.col("__in"),
                                        F.lit(0).cast(rank_t)))
                          .cast(rank_t).alias("rank_nano")))
-    if materialize:
-        out = ranks.localCheckpoint(eager=True)
-        e.unpersist()
-        nodes.unpersist()
-        return out
     return ranks
 
 
@@ -270,13 +258,7 @@ def adamic_adar_links(edges: DataFrame, top_n: int = 20,
            .union(und.select(F.col("y").alias("w"),
                              F.col("x").alias("n")))).persist()
     deg = adj.groupBy("w").agg(F.count(F.lit(1)).alias("deg"))
-    # deg-1 leaves never center a wedge, but ANSI mode evaluates the
-    # projection for every row — guard so ln(1) = 0 never divides
-    # INT term, not BIGINT: 1e6/ln(2) = 1,442,695 is the maximum, well
-    # inside int32 — the term rides the 148M-row wedge shuffle, so the
-    # narrower type cuts that exchange by 4 bytes/row (guide §2.3
-    # "narrower types"); the aggregate SUM widens back to bigint, so
-    # the output schema is unchanged
+    # ANSI evaluates every row: guard deg-1 leaves so ln(1) = 0 never divides
     term = F.when(
         F.col("deg") >= 2,
         F.floor(F.lit(1_000_000.0)
@@ -360,16 +342,7 @@ def adamic_adar_links(edges: DataFrame, top_n: int = 20,
         F.shiftright(F.col("pk"), 32).alias("u"),
         (F.col("pk") % F.lit(_PACK)).alias("v"),
         F.col("common_neighbors"), F.col("aa_micro"))
-    # r13 measured-and-REJECTED variants (tools/ab_adamic2.py, 4-way
-    # interleaved best-of-3 at sf0.1: base 23.8 s, int-term 26.8,
-    # broadcast-anti 26.5, both 26.8): (a) an explicit gated broadcast
-    # of `und` here makes Catalyst push the LeftAnti below the pair
-    # aggregate, trading the post-agg Exchange+Sort (which AQE already
-    # rewrites to a runtime BHJ) for a per-WEDGE hash probe — 148M
-    # probes cost more than the 101M-row exchange they avoid; (b) an
-    # int32 term_micro narrows the wedge exchange 4 bytes/row but the
-    # per-row widening in the sum eats the saving. The r12 plan-pruned
-    # exchange (pk + term only, w dropped) is already the narrow shape.
+    # no hint on `und`: a broadcast pushes the anti-join below the pair agg
     non_adj = unpacked.join(
         und, (unpacked["u"] == und["x"]) & (unpacked["v"] == und["y"]),
         "left_anti")
@@ -434,8 +407,8 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 6,
             .agg(F.count(F.lit(1)).alias("deg_in_core")))
 
 
-def _run_local(adj: DataFrame, key: str, other: str, kernel,
-               schema: str) -> DataFrame:
+def run_local(adj: DataFrame, key: str, other: str, kernel,
+              schema: str) -> DataFrame:
     """Run `kernel(src, dst, ids, dead) -> pandas.DataFrame` once over
     a small pinned adjacency (key, other) in ONE task (coalesce(1) +
     mapInPandas, no driver collect). src/dst are dense codes into the
@@ -484,8 +457,8 @@ def _kcore_local(adj: DataFrame, k: int, rounds: int) -> DataFrame:
         return pd.DataFrame({"node": ids[alive], "deg_in_core": deg[alive]})
 
     id_t = adj.schema["w"].dataType.simpleString()
-    return _run_local(adj, "w", "n", peel,
-                      f"node {id_t}, deg_in_core bigint")
+    return run_local(adj, "w", "n", peel,
+                     f"node {id_t}, deg_in_core bigint")
 
 
 def wl_roles(edges: DataFrame, rounds: int = 2,
@@ -573,21 +546,15 @@ def _wl_local(adj: DataFrame, rounds: int, a_col: str) -> DataFrame:
                              "wl_role": h[out]})
 
     id_t = adj.schema["n"].dataType.simpleString()
-    return _run_local(adj, "n", "m", refine,
-                      f"{a_col} {id_t}, deg bigint, wl_role string")
+    return run_local(adj, "n", "m", refine,
+                     f"{a_col} {id_t}, deg bigint, wl_role string")
 
 
 HITS_SCALE = 1_000_000_000
 
 
-def _bc(df: DataFrame, flag: bool) -> DataFrame:
-    """Broadcast hint applied only when the caller asked for it."""
-    return F.broadcast(df) if flag else df
-
-
 def hits(edges: DataFrame, iterations: int = 3,
-         src_col: str = "src", dst_col: str = "dst",
-         broadcast_scores: bool = False) -> DataFrame:
+         src_col: str = "src", dst_col: str = "dst") -> DataFrame:
     """Integer-exact HITS (Kleinberg hubs & authorities) over a
     directed edge list: hub score = how much good authority a node
     points AT, authority score = how much good hub mass points at IT
@@ -606,15 +573,10 @@ def hits(edges: DataFrame, iterations: int = 3,
     Scale shape: per round, one equi-join of the cached edge list
     against the node-grain score frame + one hash agg, then a 1-row
     total broadcast-cross-joined back (the quantiles.py device — no
-    global window). Node-only rows keep 0 via left joins.
-
-    broadcast_scores=True pins the node-grain score frame (and the
-    per-round contribution aggregate) to the broadcast side of its
-    joins — the lpa broadcast_labels device: the cached edge list
-    then never re-shuffles per half-round (post-aggregate size
-    estimates are too opaque for AQE to pick this up on its own).
-    Right whenever the NODE set fits an executor; leave False for
-    cluster-scale node sets."""
+    global window). Node-only rows keep 0 via left joins. The score
+    frames and contribution aggregates are node-grain: they join under
+    the row gate with the cached node count, so the edge list never
+    re-shuffles while the node set fits."""
     dec = "decimal(38,0)"
     e = (edges.select(F.col(src_col).alias("src"),
                       F.col(dst_col).alias("dst"))
@@ -622,6 +584,11 @@ def hits(edges: DataFrame, iterations: int = 3,
     nodes = (e.select(F.col("src").alias("node"))
              .unionByName(e.select(F.col("dst").alias("node")))
              .distinct().cache())
+    n_nodes = nodes.count()
+
+    def bc(df):
+        return gated_broadcast_rows(df, n_nodes, _NODE_PAYLOAD)
+
     hubs = nodes.withColumn("s", F.lit(HITS_SCALE).cast(dec))
     auths = None
     for i in range(iterations):
@@ -632,12 +599,11 @@ def hits(edges: DataFrame, iterations: int = 3,
         # localCheckpoint per round (on the round's hub frame, plus
         # the final auth frame) keeps the iterated lineage flat at a
         # third of the eager-everywhere materialization cost.
-        hb = _bc(hubs, broadcast_scores)
+        hb = bc(hubs)
         araw = (nodes.join(
-                    _bc(e.join(hb, e.src == hb.node)
-                        .groupBy(F.col("dst").alias("node"))
-                        .agg(F.sum("s").cast(dec).alias("raw")),
-                        broadcast_scores),
+                    bc(e.join(hb, e.src == hb.node)
+                       .groupBy(F.col("dst").alias("node"))
+                       .agg(F.sum("s").cast(dec).alias("raw"))),
                     "node", "left")
                 .select("node", F.coalesce(F.col("raw"),
                                            F.lit(0).cast(dec))
@@ -651,12 +617,11 @@ def hits(edges: DataFrame, iterations: int = 3,
                      " AS DECIMAL(38,0))").alias("s")))
         if i == iterations - 1:
             auths = auths.localCheckpoint(eager=True)
-        ab = _bc(auths, broadcast_scores)
+        ab = bc(auths)
         hraw = (nodes.join(
-                    _bc(e.join(ab, e.dst == ab.node)
-                        .groupBy(F.col("src").alias("node"))
-                        .agg(F.sum("s").cast(dec).alias("raw")),
-                        broadcast_scores),
+                    bc(e.join(ab, e.dst == ab.node)
+                       .groupBy(F.col("src").alias("node"))
+                       .agg(F.sum("s").cast(dec).alias("raw"))),
                     "node", "left")
                 .select("node", F.coalesce(F.col("raw"),
                                            F.lit(0).cast(dec))
@@ -672,16 +637,14 @@ def hits(edges: DataFrame, iterations: int = 3,
         araw.unpersist()
         hraw.unpersist()
     return (hubs.withColumnRenamed("s", "__h")
-            .join(_bc(auths.withColumnRenamed("s", "__a"),
-                      broadcast_scores), "node")
+            .join(bc(auths.withColumnRenamed("s", "__a")), "node")
             .select("node",
                     F.col("__h").cast("bigint").alias("hub_nano"),
                     F.col("__a").cast("bigint").alias("auth_nano")))
 
 
 def label_propagation(edges: DataFrame, rounds: int = 3,
-                      a_col: str = "a", b_col: str = "b",
-                      broadcast_labels: bool = False) -> DataFrame:
+                      a_col: str = "a", b_col: str = "b") -> DataFrame:
     """Synchronous label-propagation community detection over an
     undirected edge list (RAGHAVAN et al.'s near-linear LPA, made
     fully deterministic): every node starts as its own label; each
@@ -699,7 +662,9 @@ def label_propagation(edges: DataFrame, rounds: int = 3,
     (node, neighbor-label) grain, and one per-node argmax window
     whose partition is bounded by degree. Labels pin via eager
     localCheckpoint per round (node-grain rows; keeps the iterated
-    lineage flat — the pagerank/BPE convention)."""
+    lineage flat — the pagerank/BPE convention) and join under the
+    row gate with the initial label frame's count, so the cached edge
+    list never re-shuffles while the node set fits."""
     und = (edges.select(F.col(a_col).alias("n"), F.col(b_col).alias("m"))
            .unionByName(
                edges.select(F.col(b_col).alias("n"),
@@ -707,15 +672,11 @@ def label_propagation(edges: DataFrame, rounds: int = 3,
            .distinct().cache())
     labels = (und.select(F.col("n").alias("node")).distinct()
               .withColumn("lab", F.col("node"))
-              .localCheckpoint(eager=True))
+              .localCheckpoint(eager=False))
+    n_nodes = labels.count()
     w = Window.partitionBy("n").orderBy(F.col("c").desc(), F.col("lab"))
     for _ in range(rounds):
-        # broadcast_labels=True pins the node-grain label frame to the
-        # broadcast side so the cached edge list never re-shuffles per
-        # round — right whenever the NODE set fits an executor (the
-        # pagerank broadcast_ranks caveat applies: leave False for
-        # cluster-scale node sets)
-        r = F.broadcast(labels) if broadcast_labels else labels
+        r = gated_broadcast_rows(labels, n_nodes, _NODE_PAYLOAD)
         counts = (und.join(r, und.m == r.node)
                   .groupBy("n", "lab")
                   .agg(F.count(F.lit(1)).alias("c")))

@@ -655,7 +655,7 @@ def semantic_dedup_clusters(vectors: DataFrame, threshold: float,
     cc_stats: dict = {}
     comp = connected_components(pairs, "id_a", "id_b",
                                 stats_out=cc_stats).cache()
-    n_members = cc_stats.get("n_nodes")
+    n_members = cc_stats.get("n_nodes_max")
     sizes = comp.groupBy("component").agg(F.count("*").alias("__sz"))
     # membership broadcasts row-count-gated on the CC loop's free node
     # count — duplicate-fraction-proportional frames must not carry an

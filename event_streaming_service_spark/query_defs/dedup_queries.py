@@ -540,7 +540,7 @@ def q_near_dup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.cluster_survivors(
         clusters.drop("is_canonical"),
         docs.select("doc_id", "n_chars"), "n_chars",
-        n_members=stats.get("n_nodes"))
+        n_members=stats.get("n_nodes_max"))
 
 
 CONTAINMENT_PPM = 800_000

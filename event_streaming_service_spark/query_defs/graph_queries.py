@@ -12,8 +12,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from event_streaming_service_spark.operators import graph
-from event_streaming_service_spark.operators.hints import (
-    broadcast_cap_bytes, plan_bytes)
 from event_streaming_service_spark.queries import register
 from event_streaming_service_spark.sources import tables
 
@@ -99,17 +97,7 @@ def q_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = base.unionByName(
         base.select(F.col("dst").alias("src"),
                     F.col("src").alias("dst")))
-    # r13 (VERDICT r12 item #6): pin the node-grain rank/contribution
-    # frames to the broadcast side so the cached edge list never
-    # re-shuffles per iteration — the device that took HITS 5.18 ->
-    # 4.18 s in the r12 driver bench. The r4 A/B that found "no
-    # difference" predates the edge+degree cache reuse; re-measured
-    # this round (see OPTIMIZATION_r13.md). Flag derived from the
-    # dimension tables' scan stats, never a constant.
-    cust = tables.load_table(spark, sf_dir, "customer")
-    supp = tables.load_table(spark, sf_dir, "supplier")
-    bc = plan_bytes(cust) + plan_bytes(supp) <= broadcast_cap_bytes(cust)
-    return graph.pagerank(edges, iterations=ITERS, broadcast_ranks=bc)
+    return graph.pagerank(edges, iterations=ITERS)
 
 
 @register(
@@ -361,11 +349,7 @@ def q_ppr_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = base.unionByName(
         base.select(F.col("dst").alias("src"),
                     F.col("src").alias("dst"))).distinct()
-    cust = tables.load_table(spark, sf_dir, "customer")
-    supp = tables.load_table(spark, sf_dir, "supplier")
-    bc = plan_bytes(cust) + plan_bytes(supp) <= broadcast_cap_bytes(cust)
-    ranks = graph.pagerank(edges, iterations=ITERS,
-                           seeds=list(_PPR_SEEDS), broadcast_ranks=bc)
+    ranks = graph.pagerank(edges, iterations=ITERS, seeds=list(_PPR_SEEDS))
     return ranks.filter(F.col("rank_nano") > 0)
 
 
@@ -541,17 +525,7 @@ def q_hits_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
                               F.col("l_suppkey").cast("string"))
                      .alias("dst"))
              .distinct())
-    # the node set is dimension-sized (customers + suppliers), so the
-    # per-round score frames broadcast and the cached edge list never
-    # re-shuffles (the lpa broadcast_labels device). The flag derives
-    # from the DIMENSION tables' scan stats, not a constant True: at
-    # a scale factor where customer+supplier no longer fit the
-    # broadcast cap, the per-round hint turns itself off (ADVICE r12)
-    cust = tables.load_table(spark, sf_dir, "customer")
-    supp = tables.load_table(spark, sf_dir, "supplier")
-    bc = plan_bytes(cust) + plan_bytes(supp) <= broadcast_cap_bytes(cust)
-    return graph.hits(edges, iterations=HITS_ITERS,
-                      broadcast_scores=bc)
+    return graph.hits(edges, iterations=HITS_ITERS)
 
 
 LPA_ROUNDS = 3
@@ -606,8 +580,5 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     community readout near_dup-style min-label CC cannot give: parts
     of one connected graph split into cohesive purchase clusters."""
     edges = copurchase_edges(spark, sf_dir)
-    # the node set is the part dimension — broadcast the label frame
-    # so the cached edge list never re-shuffles per round
-    return (graph.label_propagation(edges, rounds=LPA_ROUNDS,
-                                    broadcast_labels=True)
+    return (graph.label_propagation(edges, rounds=LPA_ROUNDS)
             .withColumnRenamed("node", "l_partkey"))

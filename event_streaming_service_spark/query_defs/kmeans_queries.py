@@ -338,7 +338,7 @@ def q_semdedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = dedup.connected_components(pairs, a_col="vec_a",
                                       b_col="vec_b",
                                       stats_out=cc_stats)
-    n_members = cc_stats.get("n_nodes")
+    n_members = cc_stats.get("n_nodes_max")
     sizes = comp.groupBy("component").agg(
         F.count(F.lit(1)).alias("__gs"))
     quality = docs.select(F.col("doc_id").alias("vec_id"),

@@ -1,9 +1,12 @@
 """Single-task local paths of the graph fixpoints (k-core, WL roles,
 connected components) against their per-round loop paths: the shared
 `hints.local_max_pairs` gate, parity at the gate boundary, NULL ids, the
-loop path under the DuckDB oracle, and the Spark job count per query."""
+loop path under the DuckDB oracle, the node-frame broadcast gate of
+pagerank, HITS and LPA, and the Spark job count per query."""
 
 from __future__ import annotations
+
+import re
 
 import pytest
 
@@ -12,6 +15,7 @@ from event_streaming_service_spark.queries import REGISTRY, _load_all
 from tests import parity
 
 GATE = "spark.graft.cc.localMaxPairs"
+MAX_BYTES = "spark.graft.broadcast.maxBytes"
 
 
 def _with_gate(spark, value, build):
@@ -124,6 +128,43 @@ def test_cc_union_find_drops_null_endpoints(spark):
     assert rows == {(1, 1), (2, 1), (3, 1)}
 
 
+# two triangles joined by a bridge, a pendant and a one-way edge
+_TRADE = [("c1", "s1"), ("s1", "c2"), ("c2", "c1"), ("c2", "s3"),
+          ("s3", "c4"), ("c4", "s5"), ("s5", "s3"), ("s5", "c6"),
+          ("c7", "s1")]
+
+
+@pytest.mark.parametrize("build,hinted", [
+    (lambda df: graph.pagerank(df, iterations=3), True),
+    (lambda df: graph.pagerank(df, iterations=3, seeds=["c1", "c4"]), True),
+    (lambda df: graph.hits(df, iterations=2), True),
+    (lambda df: graph.label_propagation(df, rounds=2, a_col="src",
+                                        b_col="dst"), False)],
+    ids=["pagerank", "ppr", "hits", "lpa"])
+def test_node_frame_gate_parity(spark, build, hinted):
+    df = spark.createDataFrame(_TRADE, "src string, dst string")
+
+    def run():
+        out = build(df)
+        strategies = set(re.findall(
+            r"strategy=(\w+)",
+            out._jdf.queryExecution().analyzed().toString()))
+        return sorted(map(tuple, out.collect())), out.dtypes, strategies
+
+    rows, dtypes, default_hints = run()
+    spark.conf.set(MAX_BYTES, "0")
+    try:
+        rows0, dtypes0, zero_hints = run()
+    finally:
+        spark.conf.unset(MAX_BYTES)
+    assert rows and rows == rows0
+    assert dtypes == dtypes0
+    # LPA's result sits on a checkpoint, so its plan keeps no hint
+    if hinted:
+        assert default_hints == {"broadcast"}
+        assert zero_hints == {"shuffle_hash"}
+
+
 @pytest.mark.parametrize("name", ["kcore_copurchase", "wl_roles_copurchase"])
 def test_graph_loop_path_matches_oracle(spark, sf_oracle, name):
     _load_all()
@@ -138,9 +179,12 @@ def test_graph_loop_path_matches_oracle(spark, sf_oracle, name):
 
 
 # Per-round barrier jobs cost 38 (kcore) and 21 (WL) jobs per query on
-# this fixture; the single-task path needs a handful.
+# this fixture; the single-task path needs a handful. The pagerank, ppr,
+# HITS and LPA bounds are their measured counts on this fixture.
 @pytest.mark.parametrize("name,max_jobs", [
-    ("kcore_copurchase", 8), ("wl_roles_copurchase", 8)])
+    ("kcore_copurchase", 8), ("wl_roles_copurchase", 8),
+    ("pagerank_trade_graph", 28), ("ppr_trade_neighborhood", 28),
+    ("hits_trade_hubs", 58), ("lpa_communities_copurchase", 22)])
 def test_graph_query_job_count(spark, sf_oracle, name, max_jobs):
     _load_all()
     sc = spark.sparkContext

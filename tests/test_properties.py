@@ -261,8 +261,7 @@ def test_pagerank_decimal_width_matches_bigint_path(spark, raw):
     narrow = {r["node"]: r["rank_nano"]
               for r in pagerank(df, iterations=3).collect()}
     wide = {r["node"]: int(r["rank_nano"])
-            for r in pagerank(df, iterations=3, decimal=True,
-                              materialize=True).collect()}
+            for r in pagerank(df, iterations=3, decimal=True).collect()}
     assert narrow == wide
     total_cap = len(narrow) * INIT_NANO
     for v in wide.values():

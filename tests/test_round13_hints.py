@@ -85,10 +85,10 @@ def test_connected_components_stats_out(spark):
     stats: dict = {}
     labels = dedup.connected_components(pairs, stats_out=stats)
     rows = {r["node"]: r["component"] for r in labels.collect()}
-    # union-find fast path reports the 2-per-pair upper BOUND (callers
+    # single-task fast path reports the 2-per-pair upper BOUND (callers
     # only gate broadcasts on it); the loop path reports the exact count
     assert len(rows) == 9
-    assert len(rows) <= stats["n_nodes"] <= 12
+    assert len(rows) <= stats["n_nodes_max"] <= 12
     assert rows[3] == 1 and rows[11] == 10 and rows[23] == 20
     spark.conf.set("spark.graft.cc.localMaxPairs", "0")
     try:
@@ -97,7 +97,7 @@ def test_connected_components_stats_out(spark):
             pairs, stats_out=stats_loop).collect()
     finally:
         spark.conf.unset("spark.graft.cc.localMaxPairs")
-    assert stats_loop["n_nodes"] == 9
+    assert stats_loop["n_nodes_max"] == 9
 
 
 def test_semdedup_round9_halfup_matches_jvm_round(spark):
