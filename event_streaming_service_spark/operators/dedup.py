@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from event_streaming_service_spark.operators.graph import run_local
+from event_streaming_service_spark.operators.graph import pin, run_local
 from event_streaming_service_spark.operators.hints import (
     gated_broadcast_rows, local_max_pairs)
 from event_streaming_service_spark.operators.text import (
@@ -378,7 +378,7 @@ def minhash_near_dups(docs: DataFrame, threshold: float,
     )
 
 
-def _cc_local(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
+def _cc_local(pairs: DataFrame, a_col: str, b_col: str):
     """Exact min-label connected components of a SMALL pinned pair
     list in one task (`graph.run_local`: no driver collect, no barrier
     rounds): vectorised min-label hooking of each star's root onto the
@@ -387,7 +387,8 @@ def _cc_local(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
     least halves the stars of a component. Labels are ranks in id
     order, so a component's label is its smallest node id: (node,
     component), row for row the propagation loop's result on NULL-free
-    pairs. Pairs with a NULL endpoint are dropped."""
+    pairs. Pairs with a NULL endpoint are dropped. Returns `pin`'s
+    (labels, Row(node count))."""
     def components(a, b, ids, dead):
         import numpy as np
         import pandas as pd
@@ -411,8 +412,8 @@ def _cc_local(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
                              "component": ids[order[lab[nodes]]]})
 
     id_t = pairs.schema[a_col].dataType.simpleString()
-    return run_local(pairs, a_col, b_col, components,
-                     f"node {id_t}, component {id_t}").localCheckpoint()
+    return pin(run_local(pairs, a_col, b_col, components,
+                         f"node {id_t}, component {id_t}"))
 
 
 def connected_components(pairs: DataFrame, a_col: str = "doc_a",
@@ -423,11 +424,9 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     propagation: every node's label converges to the smallest node id
     reachable from it. Returns (node, component).
 
-    Round structure (r12 optimization — each barrier round of this
-    loop costs two fixed-overhead jobs, checkpoint + changed-count,
-    so the round COUNT is the cost driver, guide §1.2 "the
-    distributed algorithm"): labels initialize to min(node, min
-    neighbor) via ONE aggregate on the symmetrized edge list (the
+    Round structure (each barrier round costs fixed-overhead jobs, so
+    the round COUNT is the cost driver): labels initialize to min(node,
+    min neighbor) via ONE aggregate on the symmetrized edge list (the
     former round 1, for free — no join); each round then chains TWO
     1-hop min-propagation steps (join labels across the edges, take
     the min neighbor label, fold into the node's own) inside a single
@@ -451,40 +450,29 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     per component = the component minimum, identical to the pure
     propagation fixpoint the recursive-CTE oracle computes.
 
-    Iterative-plan hygiene: every round ends in a LAZY
-    `localCheckpoint` whose materialization is the round's single
-    action — the changed-count aggregate computes the checkpoint and
-    reads the exit test from it in ONE job (r13; the former
-    eager-checkpoint-then-count shape paid two fixed-overhead jobs
-    per barrier, and on a 1k-node graph the job count IS the cost —
-    the r12 scaling block measured semdedup_survivors FASTER on 8
-    cores than 32). The driver loop only carries COUNTS, never rows.
+    Iterative-plan hygiene: every round's frame is pinned by
+    `graph.pin`, so the aggregate that reads the exit test (changed
+    count) and the node count also materializes the round: one action
+    per barrier round. The driver loop only carries COUNTS, never
+    rows.
 
-    SMALL-GRAPH FAST PATH (r13, guide §1.2): LSH/semantic pair lists
-    are duplicate-bounded, and at or below `hints.local_max_pairs`
-    (`spark.graft.cc.localMaxPairs`, default 200k) the whole fixpoint
-    collapses into ONE executor-side pass — `_cc_local`, numpy
-    min-label hooking and pointer jumping over the pinned pair list
-    (exact min-label components, no driver collect, no barrier
-    rounds at all). The pinned pair count is known anyway (it gates
-    the path), so the decision costs one near-free cached count.
-    Above the threshold the loop below is the scale path.
+    SMALL-GRAPH FAST PATH: at or below `hints.local_max_pairs`
+    (`spark.graft.cc.localMaxPairs`, default 200k) pairs, the whole
+    fixpoint runs in ONE task — `_cc_local`, numpy min-label hooking
+    and pointer jumping over the pinned pair list (no driver collect,
+    no barrier rounds). The pair pin's count picks the path. Above the
+    gate the loop below is the scale path. Both paths report the exact
+    node count as `stats_out["n_nodes_max"]`.
     """
     # The symmetrization consumes `pairs` TWICE (one leg per
-    # direction), and building the edge cache evaluates both legs in
-    # one job — an unpinned caller pipeline (the LSH candidate+verify
-    # chain) would run twice before the cache even exists. Eager-pin
-    # the projected pair list first; callers no longer need their own
-    # checkpoint (r12: near_dup_clusters' cold path measured the
-    # verify stage re-running inside the edge-cache build).
-    pairs = pairs.select(F.col(a_col), F.col(b_col)).localCheckpoint()
-    n_pairs = pairs.count()
+    # direction): an unpinned caller pipeline (the LSH candidate+verify
+    # chain) would run twice. Pin the projected pair list first;
+    # callers need no checkpoint of their own.
+    pairs, (n_pairs,) = pin(pairs.select(F.col(a_col), F.col(b_col)))
     if n_pairs <= local_max_pairs(pairs.sparkSession):
-        labels = _cc_local(pairs, a_col, b_col)
+        labels, (n_nodes,) = _cc_local(pairs, a_col, b_col)
         if stats_out is not None:
-            # exact count would cost a job; consumers only gate
-            # broadcasts on it, so the 2-per-pair upper bound is fine
-            stats_out["n_nodes_max"] = 2 * n_pairs
+            stats_out["n_nodes_max"] = n_nodes
         return labels
     edges = (pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
              .union(pairs.select(F.col(b_col).alias("src"),
@@ -514,31 +502,18 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
                            F.least("component",
                                    F.coalesce("__nc", "component"))
                            .alias("component")))
-        stepped = (
+        # one aggregate pins the round and returns BOTH the node count
+        # (callers size-gate their broadcast of the labels on it) and
+        # the changed count (the loop's exit test)
+        stepped, (n_nodes, changed) = pin(
             cur.withColumnRenamed("component", "__hop")
             .join(labels.select(F.col("node").alias("__hop"),
                                 F.col("component").alias("__jumped")),
                   "__hop", "left")
             .select("node", "__old",
                     F.least("__hop", F.coalesce("__jumped", "__hop"))
-                    .alias("next_component"))
-            # LAZY checkpoint: the aggregate below is the action that
-            # materializes it, so each barrier round is ONE job, not
-            # two (r13 — the r12 shape paid an eager-checkpoint job
-            # plus a count job per round)
-            .localCheckpoint(eager=False))
-        # one aggregate returns BOTH the changed count (the loop's
-        # exit test) and the node count — the latter is the free
-        # byproduct callers use to size-gate their broadcast of the
-        # returned labels (VERDICT r12 items #1/#3: component
-        # membership is duplicate-fraction-proportional, so the
-        # downstream F.broadcast hints must not be unconditional)
-        row = stepped.agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.count_if(F.col("next_component")
-                       != F.col("__old")).alias("__c")).first()
-        n_nodes = int(row["__n"])
-        changed = int(row["__c"] or 0)
+                    .alias("next_component")),
+            F.count_if(F.col("next_component") != F.col("__old")))
         labels = stepped.select(
             "node", F.col("next_component").alias("component"))
         if changed == 0:

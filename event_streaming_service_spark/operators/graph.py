@@ -25,6 +25,10 @@ frame once and joins its node-grain frames through
 per-call flag. Below `hints.local_max_pairs`, k-core, WL and
 dedup.py's connected components run all their rounds in one task
 through `run_local`.
+
+Pins: a frame whose numbers a fixpoint reads is pinned by `pin`, whose
+one aggregate reads them and materializes the lazy checkpoint; any other
+round frame is an eager `localCheckpoint()`. No round frame persists.
 """
 
 from __future__ import annotations
@@ -115,22 +119,28 @@ def pagerank(edges: DataFrame, iterations: int = 5,
         else:
             quot = F.floor(F.col("rank_nano") * F.lit(damping_num)
                            / (F.lit(damping_den) * F.col("__deg")))
-        r = gated_broadcast_rows(ranks, n_nodes, _NODE_PAYLOAD)
-        contrib = (e
-                   .join(r, e.src == r.node)
-                   .select(F.col("dst").alias("node"),
-                           quot.alias("__c")))
-        agg = gated_broadcast_rows(
-            contrib.groupBy("node").agg(F.sum("__c").alias("__in")),
-            n_nodes, _NODE_PAYLOAD)
-        ranks = (nodes
-                 .join(agg, "node", "left")
-                 .select("node",
-                         (teleport
-                          + F.coalesce(F.col("__in"),
-                                       F.lit(0).cast(rank_t)))
+        ranks = (_propagate(nodes, e, ranks, n_nodes, "src", "dst",
+                            quot, rank_t)
+                 .select("node", (teleport + F.col("__in"))
                          .cast(rank_t).alias("rank_nano")))
     return ranks
+
+
+def _propagate(nodes: DataFrame, e: DataFrame, scores: DataFrame,
+               n_nodes: int, on: str, to: str, term, t: str) -> DataFrame:
+    """One propagation step of PageRank and HITS: join each edge of `e`
+    to the `scores` row of its `on` endpoint, sum `term` per `to`
+    endpoint as type `t`, and return (node, __in) over every node of
+    `nodes`, 0 where nothing arrives. Both node-grain sides join under
+    the row gate with `n_nodes`."""
+    s = gated_broadcast_rows(scores, n_nodes, _NODE_PAYLOAD)
+    arrived = gated_broadcast_rows(
+        e.join(s, e[on] == s.node)
+        .groupBy(F.col(to).alias("node"))
+        .agg(F.sum(term).cast(t).alias("__in")),
+        n_nodes, _NODE_PAYLOAD)
+    return nodes.join(arrived, "node", "left").select(
+        "node", F.coalesce(F.col("__in"), F.lit(0).cast(t)).alias("__in"))
 
 
 def triangle_stats(edges: DataFrame, a_col: str = "a",
@@ -365,27 +375,24 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 6,
 
     Returns (node, deg_in_core) for surviving nodes.
 
-    Plan shape: the symmetrized adjacency (w, n) is pinned by a lazy
-    localCheckpoint whose count materializes it, and that count picks
-    the path. At most `hints.local_max_pairs` pairs (count / 2): all
-    rounds run in ONE task (`_kcore_local`, coalesce(1) + numpy
-    degree peeling in mapInPandas, no driver collect), because on a
-    small graph the per-round barrier jobs, not the data, are the
-    cost. Above the gate, one job per round: a degree aggregate and
-    two semi-joins on the shrinking adjacency, ending in a lazy
-    localCheckpoint that the round's edge count materializes (adj
-    feeds three consumers per round, so an unpinned plan re-derives
-    every level 3x). The survivor set joins as the broadcast side
-    under the row gate, the adjacency count bounding the node count.
+    Plan shape: the symmetrized adjacency (w, n) is pinned by `pin`,
+    whose count picks the path. At most `hints.local_max_pairs` pairs
+    (count / 2): all rounds run in ONE task (`_kcore_local`,
+    coalesce(1) + numpy degree peeling in mapInPandas, no driver
+    collect), because on a small graph the per-round barrier jobs, not
+    the data, are the cost. Above the gate, one action per round: a
+    degree aggregate and two semi-joins on the shrinking adjacency,
+    pinned by `pin` with the round's edge count (adj feeds three
+    consumers per round, so an unpinned plan re-derives every level
+    3x). The survivor set joins as the broadcast side under the row
+    gate, the adjacency count bounding the node count.
     Both paths stop at the fixpoint: a round that drops no edge
     leaves every later round a no-op."""
     und = (edges.select(F.col(a_col).alias("x"),
                         F.col(b_col).alias("y")).distinct())
-    adj = (und.select(F.col("x").alias("w"), F.col("y").alias("n"))
-           .union(und.select(F.col("y").alias("w"),
-                             F.col("x").alias("n")))
-           ).localCheckpoint(eager=False)
-    n_edges = adj.count()
+    adj, (n_edges,) = pin(
+        und.select(F.col("x").alias("w"), F.col("y").alias("n"))
+        .union(und.select(F.col("y").alias("w"), F.col("x").alias("n"))))
     # rounds=0 keeps the loop: its one aggregate also reports a NULL node
     if rounds > 0 and n_edges // 2 <= local_max_pairs(adj.sparkSession):
         return _kcore_local(adj, k, rounds)
@@ -395,16 +402,21 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 6,
                 .filter(F.col("deg") >= k)
                 .select("w"))
         keep = gated_broadcast_rows(keep, n_edges, 8)
-        adj = (adj
-               .join(keep, "w", "left_semi")
-               .join(keep.select(F.col("w").alias("n")), "n",
-                     "left_semi")).localCheckpoint(eager=False)
-        n_next = adj.count()
+        adj, (n_next,) = pin(
+            adj.join(keep, "w", "left_semi")
+            .join(keep.select(F.col("w").alias("n")), "n", "left_semi"))
         if n_next == n_edges:
             break
         n_edges = n_next
     return (adj.groupBy(F.col("w").alias("node"))
             .agg(F.count(F.lit(1)).alias("deg_in_core")))
+
+
+def pin(df: DataFrame, *aggs):
+    """Pin `df` with a lazy localCheckpoint that ONE aggregate
+    materializes: returns (pinned frame, Row(row count, *aggs))."""
+    df = df.localCheckpoint(eager=False)
+    return df, df.agg(F.count(F.lit(1)), *aggs).first()
 
 
 def run_local(adj: DataFrame, key: str, other: str, kernel,
@@ -479,29 +491,27 @@ def wl_roles(edges: DataFrame, rounds: int = 2,
 
     Returns (node, deg, wl_role) with node named after a_col.
 
-    Plan shape: the symmetrized adjacency is pinned by a lazy
-    localCheckpoint whose count materializes it, and that count picks
-    the path. At most `hints.local_max_pairs` pairs (count / 2): all
-    rounds run in ONE task (`_wl_local`, coalesce(1) + pandas/hashlib
-    in mapInPandas, no driver collect). Above the gate, one shuffle per
-    round: join the neighbour's current hash onto the adjacency and
-    re-aggregate the sorted list per node; both hash on the node key,
-    so the exchange is reused. The node-grain hash frame joins as the
-    broadcast side under the row gate (the adjacency count bounds the
-    node count) and persists each round, since it feeds both the
-    neighbour-list build and the relabel join. The collect_list per
-    node is degree-bounded — a 1e6-degree hub makes a 32 MB label
-    list, the hub hazard adamic_adar_links caps."""
+    Plan shape: the symmetrized adjacency is pinned by `pin`, whose
+    count picks the path. At most `hints.local_max_pairs` pairs
+    (count / 2): all rounds run in ONE task (`_wl_local`, coalesce(1)
+    + pandas/hashlib in mapInPandas, no driver collect). Above the
+    gate, one shuffle per round: join the neighbour's current hash onto
+    the adjacency and re-aggregate the sorted list per node; both hash
+    on the node key, so the exchange is reused. The node-grain hash
+    frame joins as the broadcast side under the row gate (the adjacency
+    count bounds the node count) and each round's is an eager
+    localCheckpoint, since it feeds both the neighbour-list build and
+    the relabel join. The collect_list per node is degree-bounded — a
+    1e6-degree hub makes a 32 MB label list, the hub hazard
+    adamic_adar_links caps."""
     fwd = edges.select(F.col(a_col).alias("n"), F.col(b_col).alias("m"))
-    adj = (fwd.unionByName(fwd.select(F.col("m").alias("n"),
-                                      F.col("n").alias("m")))
-           .localCheckpoint(eager=False))
-    n_adj = adj.count()
+    adj, (n_adj,) = pin(fwd.unionByName(
+        fwd.select(F.col("m").alias("n"), F.col("n").alias("m"))))
     if n_adj // 2 <= local_max_pairs(adj.sparkSession):
         return _wl_local(adj, rounds, a_col)
     deg = adj.groupBy("n").agg(F.count(F.lit(1)).alias("deg"))
     h = deg.select("n", F.lpad(F.col("deg").cast("string"), 8, "0")
-                   .alias("h")).persist()
+                   .alias("h"))
     for _ in range(rounds):
         hb = gated_broadcast_rows(h, n_adj, 48)
         nb = (adj.join(hb.select(F.col("n").alias("m"),
@@ -511,7 +521,7 @@ def wl_roles(edges: DataFrame, rounds: int = 2,
                   ",", F.sort_array(F.collect_list("hm"))).alias("nbs")))
         h = (hb.join(nb, "n")
              .select("n", F.md5(F.concat_ws(":", "h", "nbs")).alias("h"))
-             .persist())
+             .localCheckpoint())
     return (deg.join(h, "n")
             .select(F.col("n").alias(a_col),
                     F.col("deg").cast("bigint").alias("deg"),
@@ -570,13 +580,12 @@ def hits(edges: DataFrame, iterations: int = 3,
     truncating in both engines, every intermediate is decimal(38,0),
     so the unrolled oracle hash-matches exactly.
 
-    Scale shape: per round, one equi-join of the cached edge list
-    against the node-grain score frame + one hash agg, then a 1-row
-    total broadcast-cross-joined back (the quantiles.py device — no
-    global window). Node-only rows keep 0 via left joins. The score
-    frames and contribution aggregates are node-grain: they join under
-    the row gate with the cached node count, so the edge list never
-    re-shuffles while the node set fits."""
+    Scale shape: per half-round, one equi-join of the cached edge list
+    against the node-grain score frame + one hash agg (`_propagate`),
+    pinned by the aggregate that reads its total; node-only rows keep 0
+    via left joins. The score frames and contribution aggregates are
+    node-grain: they join under the row gate with the cached node
+    count, so the edge list never re-shuffles while the node set fits."""
     dec = "decimal(38,0)"
     e = (edges.select(F.col(src_col).alias("src"),
                       F.col(dst_col).alias("dst"))
@@ -586,58 +595,21 @@ def hits(edges: DataFrame, iterations: int = 3,
              .distinct().cache())
     n_nodes = nodes.count()
 
-    def bc(df):
-        return gated_broadcast_rows(df, n_nodes, _NODE_PAYLOAD)
+    def half(scores, on, to):
+        raw, (_, tot) = pin(
+            _propagate(nodes, e, scores, n_nodes, on, to, "s", dec),
+            F.sum("__in").cast(dec))
+        a, d = F.col("__in") * HITS_SCALE, F.lit(tot).cast(dec)
+        return raw.select("node",
+                          ((a - F.pmod(a, d)) / d).cast(dec).alias("s"))
 
     hubs = nodes.withColumn("s", F.lit(HITS_SCALE).cast(dec))
-    auths = None
-    for i in range(iterations):
-        # each raw frame is consumed TWICE (total + normalize) and
-        # feeds the remaining rounds -> without a pin per round the
-        # plan tree doubles per half-round (OOMed the driver). A lazy
-        # persist covers the double consumption; ONE eager
-        # localCheckpoint per round (on the round's hub frame, plus
-        # the final auth frame) keeps the iterated lineage flat at a
-        # third of the eager-everywhere materialization cost.
-        hb = bc(hubs)
-        araw = (nodes.join(
-                    bc(e.join(hb, e.src == hb.node)
-                       .groupBy(F.col("dst").alias("node"))
-                       .agg(F.sum("s").cast(dec).alias("raw"))),
-                    "node", "left")
-                .select("node", F.coalesce(F.col("raw"),
-                                           F.lit(0).cast(dec))
-                        .alias("raw"))
-                .persist())
-        atot = araw.agg(F.sum("raw").cast(dec).alias("__tot"))
-        auths = (araw.crossJoin(F.broadcast(atot))
-                 .select("node", F.expr(
-                     f"CAST((raw * {HITS_SCALE} - pmod(raw *"
-                     f" {HITS_SCALE}, __tot)) / __tot"
-                     " AS DECIMAL(38,0))").alias("s")))
-        if i == iterations - 1:
-            auths = auths.localCheckpoint(eager=True)
-        ab = bc(auths)
-        hraw = (nodes.join(
-                    bc(e.join(ab, e.dst == ab.node)
-                       .groupBy(F.col("src").alias("node"))
-                       .agg(F.sum("s").cast(dec).alias("raw"))),
-                    "node", "left")
-                .select("node", F.coalesce(F.col("raw"),
-                                           F.lit(0).cast(dec))
-                        .alias("raw"))
-                .persist())
-        htot = hraw.agg(F.sum("raw").cast(dec).alias("__tot"))
-        hubs = (hraw.crossJoin(F.broadcast(htot))
-                .select("node", F.expr(
-                    f"CAST((raw * {HITS_SCALE} - pmod(raw *"
-                    f" {HITS_SCALE}, __tot)) / __tot"
-                    " AS DECIMAL(38,0))").alias("s"))
-                .localCheckpoint(eager=True))
-        araw.unpersist()
-        hraw.unpersist()
+    for _ in range(iterations):
+        auths = half(hubs, "src", "dst")
+        hubs = half(auths, "dst", "src")
     return (hubs.withColumnRenamed("s", "__h")
-            .join(bc(auths.withColumnRenamed("s", "__a")), "node")
+            .join(gated_broadcast_rows(auths.withColumnRenamed("s", "__a"),
+                                       n_nodes, _NODE_PAYLOAD), "node")
             .select("node",
                     F.col("__h").cast("bigint").alias("hub_nano"),
                     F.col("__a").cast("bigint").alias("auth_nano")))
@@ -662,18 +634,16 @@ def label_propagation(edges: DataFrame, rounds: int = 3,
     (node, neighbor-label) grain, and one per-node argmax window
     whose partition is bounded by degree. Labels pin via eager
     localCheckpoint per round (node-grain rows; keeps the iterated
-    lineage flat — the pagerank/BPE convention) and join under the
-    row gate with the initial label frame's count, so the cached edge
-    list never re-shuffles while the node set fits."""
+    lineage flat) and join under the row gate with the initial label
+    frame's count from `pin`, so the cached edge list never
+    re-shuffles while the node set fits."""
     und = (edges.select(F.col(a_col).alias("n"), F.col(b_col).alias("m"))
            .unionByName(
                edges.select(F.col(b_col).alias("n"),
                             F.col(a_col).alias("m")))
            .distinct().cache())
-    labels = (und.select(F.col("n").alias("node")).distinct()
-              .withColumn("lab", F.col("node"))
-              .localCheckpoint(eager=False))
-    n_nodes = labels.count()
+    labels, (n_nodes,) = pin(und.select(F.col("n").alias("node"))
+                             .distinct().withColumn("lab", F.col("node")))
     w = Window.partitionBy("n").orderBy(F.col("c").desc(), F.col("lab"))
     for _ in range(rounds):
         r = gated_broadcast_rows(labels, n_nodes, _NODE_PAYLOAD)
@@ -684,7 +654,7 @@ def label_propagation(edges: DataFrame, rounds: int = 3,
                   .withColumn("__rn", F.row_number().over(w))
                   .filter(F.col("__rn") == 1)
                   .select(F.col("n").alias("node"), "lab")
-                  .localCheckpoint(eager=True))
+                  .localCheckpoint())
     wlab = Window.partitionBy("lab")
     return labels.select(
         "node", F.col("lab").alias("community"),

@@ -87,7 +87,6 @@ def plan_bytes(df: DataFrame) -> int:
 
 
 def gated_broadcast(df: DataFrame, est_bytes: float | int,
-                    cap: int | None = None,
                     fallback: str = "shuffle_hash") -> DataFrame:
     """`F.broadcast(df)` when the caller's zero-job estimate fits the
     gate, else a SHUFFLE_HASH hint (the small-but-not-broadcastable
@@ -95,9 +94,7 @@ def gated_broadcast(df: DataFrame, est_bytes: float | int,
     planner's graceful fallback if even that is refused). Pass
     fallback="none" for non-equi/cross joins where a shuffle-hash
     hint cannot apply (the planner falls back to its own strategy)."""
-    if cap is None:
-        cap = broadcast_cap_bytes(df)
-    if est_bytes <= cap:
+    if est_bytes <= broadcast_cap_bytes(df):
         return F.broadcast(df)
     if fallback == "shuffle_hash":
         return df.hint("SHUFFLE_HASH")
@@ -106,12 +103,10 @@ def gated_broadcast(df: DataFrame, est_bytes: float | int,
 
 def gated_broadcast_rows(df: DataFrame, est_rows: int | None,
                          row_payload_bytes: int,
-                         cap: int | None = None,
                          fallback: str = "shuffle_hash") -> DataFrame:
     """Row-count form of the gate: `est_rows` is a count the caller
     already holds (None = unknown = too big)."""
     if est_rows is None:
         est_rows = 1 << 62
     return gated_broadcast(
-        df, est_rows * (row_payload_bytes + ROW_OVERHEAD_BYTES), cap,
-        fallback)
+        df, est_rows * (row_payload_bytes + ROW_OVERHEAD_BYTES), fallback)

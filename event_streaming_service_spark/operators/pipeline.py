@@ -29,19 +29,6 @@ TOPIC_PREFIX = "nnipa.events."
 STACKTRACE_LIMIT = 1000   # EventPublisher.java:177-180
 
 
-def is_valid(event_key: Column, ts: Column, now: Column) -> Column:
-    """P3: the validation predicate (BaseEventConsumer.java:136-163).
-
-    Missing/empty event id -> invalid. Age > 7 days -> invalid here
-    (the reference only warns, but counts it stale; we expose the
-    policy as a hard filter plus a reason column so both behaviors
-    are derivable).
-    """
-    has_id = event_key.isNotNull() & (event_key != "")
-    fresh = ts >= now - F.expr(f"INTERVAL {MAX_AGE_DAYS} DAYS")
-    return has_id & fresh
-
-
 def rejection_reason(event_key: Column, ts: Column, now: Column) -> Column:
     """Why a row failed validation, mirroring the reference's log branches."""
     return (

@@ -103,10 +103,6 @@ def stopword_ratio_from_tokens(toks: Column) -> Column:
     return F.size(stops) * 1.0 / F.greatest(F.size(toks), F.lit(1))
 
 
-def stopword_ratio(text: Column) -> Column:
-    return stopword_ratio_from_tokens(tokens(text))
-
-
 def language_guess_from_tokens(toks: Column, threshold: float = 0.03) -> Column:
     """n-gram-heuristic language ID: English function words make up a
     few percent of natural English text; below threshold -> unknown.
@@ -114,10 +110,6 @@ def language_guess_from_tokens(toks: Column, threshold: float = 0.03) -> Column:
     shape, one `when` branch per language.)"""
     return F.when(stopword_ratio_from_tokens(toks) >= threshold,
                   F.lit("en")).otherwise(F.lit("unknown"))
-
-
-def language_guess(text: Column, threshold: float = 0.03) -> Column:
-    return language_guess_from_tokens(tokens(text), threshold)
 
 
 def quality_score_from_tokens(toks: Column, n_chars: Column) -> Column:
@@ -129,10 +121,6 @@ def quality_score_from_tokens(toks: Column, n_chars: Column) -> Column:
                               / F.greatest(n_toks, F.lit(1)) * 2.0, F.lit(1.0))
     stop_component = F.least(stopword_ratio_from_tokens(toks) * 10.0, F.lit(1.0))
     return (len_component * 0.4 + vocab_component * 0.3 + stop_component * 0.3)
-
-
-def quality_score(text: Column, n_chars: Column) -> Column:
-    return quality_score_from_tokens(tokens(text), n_chars)
 
 
 def fingerprint_exact(text: Column) -> Column:

@@ -165,34 +165,59 @@ def test_node_frame_gate_parity(spark, build, hinted):
         assert zero_hints == {"shuffle_hash"}
 
 
-@pytest.mark.parametrize("name", ["kcore_copurchase", "wl_roles_copurchase"])
+@pytest.mark.parametrize("name", [
+    "kcore_copurchase", "wl_roles_copurchase", "near_dup_clusters",
+    "semdedup_survivors", "semantic_dedup_clusters"])
 def test_graph_loop_path_matches_oracle(spark, sf_oracle, name):
     _load_all()
     spec = REGISTRY[name]
     spark.conf.set(GATE, "0")
     try:
         df = spec.builder(spark, sf_oracle)
+        # CC results sit on a checkpoint, so their plans never show the
+        # local path; gate 0 alone selects the loop there
         assert not _ran_local(df)
         parity.compare(df, parity.run_oracle(spec.oracle, sf_oracle), name)
     finally:
         spark.conf.unset(GATE)
 
 
+def _job_count(spark, sf, name, path):
+    # frames an earlier test left cached would shorten the plan
+    spark.catalog.clearCache()
+    _load_all()
+    sc = spark.sparkContext
+    group = f"job-count-{name}-{path}"
+    sc.setJobGroup(group, name)
+    try:
+        REGISTRY[name].builder(spark, sf).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 # Per-round barrier jobs cost 38 (kcore) and 21 (WL) jobs per query on
-# this fixture; the single-task path needs a handful. The pagerank, ppr,
-# HITS and LPA bounds are their measured counts on this fixture.
+# this fixture; the single-task path needs a handful. The other bounds
+# are the measured counts on this fixture.
 @pytest.mark.parametrize("name,max_jobs", [
     ("kcore_copurchase", 8), ("wl_roles_copurchase", 8),
     ("pagerank_trade_graph", 28), ("ppr_trade_neighborhood", 28),
-    ("hits_trade_hubs", 58), ("lpa_communities_copurchase", 22)])
+    ("hits_trade_hubs", 42), ("lpa_communities_copurchase", 22),
+    ("near_dup_clusters", 34), ("semdedup_survivors", 23),
+    ("semantic_dedup_clusters", 12)])
 def test_graph_query_job_count(spark, sf_oracle, name, max_jobs):
-    _load_all()
-    sc = spark.sparkContext
-    group = f"job-count-{name}"
-    sc.setJobGroup(group, name)
+    jobs = _job_count(spark, sf_oracle, name, "default")
+    assert 0 < jobs <= max_jobs, jobs
+
+
+# the per-round loop paths (gate 0), at their measured counts on this
+# fixture
+@pytest.mark.parametrize("name,max_jobs", [
+    ("kcore_copurchase", 37), ("wl_roles_copurchase", 18)])
+def test_graph_loop_path_job_count(spark, sf_oracle, name, max_jobs):
+    spark.conf.set(GATE, "0")
     try:
-        REGISTRY[name].builder(spark, sf_oracle).collect()
+        jobs = _job_count(spark, sf_oracle, name, "loop")
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= max_jobs, len(jobs)
+        spark.conf.unset(GATE)
+    assert 0 < jobs <= max_jobs, jobs

@@ -85,10 +85,9 @@ def test_connected_components_stats_out(spark):
     stats: dict = {}
     labels = dedup.connected_components(pairs, stats_out=stats)
     rows = {r["node"]: r["component"] for r in labels.collect()}
-    # single-task fast path reports the 2-per-pair upper BOUND (callers
-    # only gate broadcasts on it); the loop path reports the exact count
+    # both paths report the exact node count
     assert len(rows) == 9
-    assert len(rows) <= stats["n_nodes_max"] <= 12
+    assert stats["n_nodes_max"] == 9
     assert rows[3] == 1 and rows[11] == 10 and rows[23] == 20
     spark.conf.set("spark.graft.cc.localMaxPairs", "0")
     try:

@@ -1,7 +1,8 @@
 """Regenerate the BENCH_NOTES.md comparison table: every bench.py
-headline query timed in Spark (noop sink) and in DuckDB against the
-oracle SQL (fetchall) — per-query warmup then best-of-2, one shared
-session per engine.
+headline query (or only the queries named on argv — the per-query
+iteration loop for perf work) timed in Spark (noop sink) and in DuckDB
+against the oracle SQL (fetchall) — per-query warmup then best-of-2,
+one shared session per engine.
 
 Both engines read the SAME splittable multi-file fixture copy that
 bench.py measures (sources/fixtures.py): single-row-group fixture files
@@ -10,7 +11,7 @@ the row group, so pairing on the rewritten copy is the apples-to-apples
 comparison. Opt out with SPARK_GRAFT_NO_SPLIT=1 to measure the raw
 driver fixtures.
 
-Usage: python tools/gen_bench_notes.py [> table.md]
+Usage: python tools/gen_bench_notes.py [name ...] [> table.md]
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 """
 
@@ -58,7 +59,7 @@ def main() -> None:
     SESSION_EVERY = 40
     rows = []
     total_s = total_d = 0.0
-    for qi, name in enumerate(BENCH_QUERIES):
+    for qi, name in enumerate(sys.argv[1:] or BENCH_QUERIES):
         if qi > 0 and qi % SESSION_EVERY == 0:
             spark.stop()
             spark = get_spark("bench-notes", cpus=CPUS,
@@ -100,8 +101,9 @@ def main() -> None:
         print(f"| {name} | {best_s:.2f} | {dtxt} | {ratio} |",
               flush=True)
 
-    print(f"| **total (oracle-paired)** | **{total_s:.2f}** | "
-          f"**{total_d:.2f}** | **{total_s / total_d:.1f}x** |")
+    if rows:
+        print(f"| **total (oracle-paired)** | **{total_s:.2f}** | "
+              f"**{total_d:.2f}** | **{total_s / total_d:.1f}x** |")
     # honesty split: floor rows vs work-bound rows
     fl = [(s, d) for _, s, d, f in rows if f]
     wb = [(s, d) for _, s, d, f in rows if not f]
