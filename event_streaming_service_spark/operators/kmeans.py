@@ -4,9 +4,8 @@ corpus with k-means, then deduplicate within clusters by cosine; the
 clustering stage is this operator). Generalizes the per-subspace Lloyd
 trainer the PQ index already ships (operators/pq.py:train_codebook):
 with m_sub=1 the "subspace" is the whole vector, so codebook training
-IS k-means and code assignment IS cluster assignment — one code path,
-one parity story (the Arrow tensor kernel's bit-parity with the JVM
-expression twin is asserted by tools/scale_probe.py:pq_codes).
+IS k-means and code assignment IS cluster assignment — one code path
+(the pq_codes_arrow tensor kernel) for both.
 
 Exactness devices (the repo conventions): clustering runs on the
 oracle-proven SQ8 integer representation; seeds are the first
@@ -20,11 +19,10 @@ same rounds in SQL.
 Scale shape: per Lloyd round one Arrow assignment pass over the corpus
 plus one bounded (cluster, component)-grain aggregate (n_clusters *
 dim rows, collected — the codebook convention); the final
-assignment + inertia is ONE codegen'd projection against the literal
-centroid array (no join, no shuffle over the corpus) feeding an
-n_clusters-row aggregate. Reference parity: the reference has no
-clustering surface; this extends SURVEY.md section 2.12's
-LLM-data-pipeline mandate (dedup/similarity families).
+assignment + inertia is ONE more Arrow pass (no join, no shuffle over
+the corpus) feeding an n_clusters-row aggregate. Reference parity: the
+reference has no clustering surface; this extends SURVEY.md section
+2.12's LLM-data-pipeline mandate (dedup/similarity families).
 """
 
 from __future__ import annotations
@@ -35,64 +33,37 @@ from pyspark.sql import functions as F
 from event_streaming_service_spark.operators.hints import (
     gated_broadcast, plan_bytes)
 from event_streaming_service_spark.operators.pq import (
-    _codebook_literal, _codes_expr, _dot, _l2, pq_codes_arrow,
-    train_codebook)
+    _dot, _l2, pq_codes_arrow, train_codebook)
 from event_streaming_service_spark.operators.quantize import quantize_codes
 
 
 def kmeans_assign(emb: DataFrame, n_clusters: int = 8,
                   rounds: int = 2, id_col: str = "vec_id",
                   vec_col: str = "embedding",
-                  emit_qv: bool = False,
-                  use_arrow: bool = True) -> DataFrame:
+                  emit_qv: bool = False) -> DataFrame:
     """(id, cluster_id, point_inertia[, qv]): train `rounds` integer
     Lloyd rounds (train_codebook with m_sub=1 — full-vector k-means),
     then assign every vector to its nearest final centroid and report
-    the exact squared-L2 point inertia. The literal centroid grid is
+    the exact squared-L2 point inertia, both from the pq_codes_arrow
+    tensor kernel's single pass (`emit_dist`). The centroid grid is
     n_clusters * dim ints (512 at the 8x64 default) — the bounded
     codebook-collect convention. `emit_qv=True` passes the SQ8 vector
     through for downstream within-cluster scoring (semdedup_pairs).
 
-    `use_arrow=True` (default — the registered execution path) runs
-    assignment + inertia in the pq_codes_arrow tensor kernel's single
-    pass (`emit_dist`); the JVM expression twin below stays as the
-    parity reference, asserted equal by tools/scale_probe.py:kmeans.
-
     The quantized frame persists ONCE and feeds both training and the
-    assignment pass (ADVICE r11: each quantize_codes call re-runs
-    dim_stats, a corpus-wide per-dimension min/max aggregate — the
-    same redundant-rescan pattern the containment/BPE fixes closed)."""
+    assignment pass: each quantize_codes call re-runs dim_stats, a
+    corpus-wide per-dimension min/max aggregate."""
     q = quantize_codes(emb, vec_col, id_col).persist()
     seeds = train_codebook(q, m_sub=1, n_codes=n_clusters,
                            lloyd_rounds=rounds, id_col=id_col)
-    dim = len(seeds[0])
-    if use_arrow:
-        coded = pq_codes_arrow(q, seeds, 1, id_col=id_col,
-                               emit_dist=True, emit_qv=emit_qv)
-        out = [F.col(id_col),
-               F.element_at("codes", 1).cast("int").alias("cluster_id"),
-               F.col("dist").alias("point_inertia")]
-        if emit_qv:
-            out.append(F.col("qv"))
-        return coded.select(*out)
-    cent = _codebook_literal(seeds, 1, dim)
-    # assignment + inertia in two chained projections (the cluster id
-    # indexes the literal grid once instead of re-running the argmin
-    # inside the inertia expression)
-    asg = (q
-           .select(F.col(id_col),
-                   F.col("qv"),
-                   F.element_at(
-                       _codes_expr(cent, 1, dim, n_clusters), 1)
-                   .cast("int").alias("cluster_id")))
-    out = [F.col(id_col), F.col("cluster_id"),
-           _l2(F.col("qv"),
-               F.element_at(F.element_at(cent, 1),
-                            F.col("cluster_id") + 1))
-           .alias("point_inertia")]
+    coded = pq_codes_arrow(q, seeds, 1, id_col=id_col,
+                           emit_dist=True, emit_qv=emit_qv)
+    out = [F.col(id_col),
+           F.element_at("codes", 1).cast("int").alias("cluster_id"),
+           F.col("dist").alias("point_inertia")]
     if emit_qv:
         out.append(F.col("qv"))
-    return asg.select(*out)
+    return coded.select(*out)
 
 
 def kmeans_cluster_report(emb: DataFrame, n_clusters: int = 8,
@@ -107,7 +78,7 @@ def kmeans_cluster_report(emb: DataFrame, n_clusters: int = 8,
     The n_clusters-row `rep` frame is eagerly pinned (localCheckpoint
     — the ols2_kfold_cv foldm device): it has two consumers (the
     total aggregate and the join), and without the pin each re-runs
-    the corpus-wide Arrow assignment pass (VERDICT r11 item #4)."""
+    the corpus-wide Arrow assignment pass."""
     pt = kmeans_assign(emb, n_clusters, rounds, id_col, vec_col)
     rep = (pt.groupBy("cluster_id")
            .agg(F.count(F.lit(1)).cast("bigint").alias("n_members"),
@@ -127,82 +98,52 @@ def kmeans_cluster_report(emb: DataFrame, n_clusters: int = 8,
 def semdedup_pairs(emb: DataFrame, n_clusters: int = 8,
                    rounds: int = 2, threshold_ppb: int = 990_000_000,
                    id_col: str = "vec_id",
-                   vec_col: str = "embedding",
-                   use_arrow: bool = True) -> DataFrame:
+                   vec_col: str = "embedding") -> DataFrame:
     """The SemDeDup second stage (Abbas et al. 2023): within each
     k-means cluster, flag vector pairs whose cosine exceeds the
     threshold — semantic near-duplicates the cheaper lexical passes
     miss (a paraphrase shares no shingles but sits on the same point
-    of embedding space). The all-pairs join runs ONLY inside a
-    cluster: cluster granularity is the quadratic fan-out bound
-    exactly as the LSH band is for MinHash (at corpus scale
-    n_clusters grows ~sqrt(N), keeping per-cluster membership — and
-    so the pair count — bounded; the kmeans_cluster_report balance
-    readout is the gate that catches a hot cluster BEFORE this join).
+    of embedding space). Pairs are scored ONLY inside a cluster:
+    cluster granularity is the quadratic fan-out bound exactly as the
+    LSH band is for MinHash (at corpus scale n_clusters grows
+    ~sqrt(N), keeping per-cluster membership — and so the pair count
+    — bounded; the kmeans_cluster_report balance readout is the gate
+    that catches a hot cluster BEFORE this stage).
 
-    Exactness: cosine on the SQ8 integer vectors — exact BIGINT dot
-    products into ONE pinned 9dp float spelling (the IVF convention),
-    compared against an integer ppb threshold. Pairs emit once
-    (id_a < id_b), directed survivorship is the caller's argmax.
-    Output: cluster_id, vec_a, vec_b, cosine_9dp.
-
-    `use_arrow=True` (the registered path) scores each cluster with
-    ONE BLAS Gram kernel per group (applyInPandas: exact int64
-    V @ V.T, the float steps spelled in the JVM twin's exact order,
-    F.round-parity half-up pinning) instead of the interpreted
-    per-element zip_with lambdas of the self-join form — that twin
-    stays below as the parity reference, asserted equal by the unit
-    test. Per-group memory is one cluster's members — exactly the
-    bound SemDeDup's clustering exists to enforce."""
+    Each cluster is scored by ONE BLAS Gram kernel per group
+    (applyInPandas): exact int64 V @ V.T dot products, then the
+    oracle's float steps in its order — double quotient over the two
+    square-rooted norms, pinned to 9dp half away from zero (DuckDB
+    ROUND) — compared against the integer ppb threshold as a double.
+    Pairs emit once (id_a < id_b); directed survivorship is the
+    caller's argmax. Output: cluster_id, vec_a, vec_b, cosine_9dp.
+    Per-group memory is one cluster's members — exactly the bound
+    SemDeDup's clustering exists to enforce."""
     asg = kmeans_assign(emb, n_clusters, rounds, id_col, vec_col,
                         emit_qv=True).persist()
-    if use_arrow:
-        import numpy as np  # noqa: F401
-        import pandas as pd  # noqa: F401
-        thr = threshold_ppb / 1_000_000_000.0
+    thr = threshold_ppb / 1_000_000_000.0
 
-        def per_cluster(key, pdf):
-            import numpy as np
-            import pandas as pd
-            order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
-            ids = pdf[id_col].to_numpy()[order]
-            V = np.stack(pdf["qv"].to_numpy()).astype(np.int64)[order]
-            G = V @ V.T  # exact: |qv_i| <= 127, dims <= 1e4 << 2^63
-            nrm = np.sqrt(np.diag(G).astype(np.float64))
-            C = G.astype(np.float64) / (nrm[:, None] * nrm[None, :])
-            # F.round 9dp HALF_UP away-from-zero (the ivf_cells_arrow
-            # device, parity-asserted there)
-            R = np.sign(C) * (np.floor(np.abs(C) * 1e9 + 0.5) / 1e9)
-            iu, ju = np.triu_indices(len(ids), k=1)
-            keep = R[iu, ju] >= thr
-            return pd.DataFrame({
-                "cluster_id": np.full(int(keep.sum()), key[0],
-                                      dtype="int32"),
-                "vec_a": ids[iu[keep]], "vec_b": ids[ju[keep]],
-                "cosine_9dp": R[iu, ju][keep]})
+    def per_cluster(key, pdf):
+        import numpy as np
+        import pandas as pd
+        order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
+        ids = pdf[id_col].to_numpy()[order]
+        V = np.stack(pdf["qv"].to_numpy()).astype(np.int64)[order]
+        G = V @ V.T  # exact: |qv_i| <= 127, dims <= 1e4 << 2^63
+        nrm = np.sqrt(np.diag(G).astype(np.float64))
+        C = G.astype(np.float64) / (nrm[:, None] * nrm[None, :])
+        R = np.sign(C) * (np.floor(np.abs(C) * 1e9 + 0.5) / 1e9)
+        iu, ju = np.triu_indices(len(ids), k=1)
+        keep = R[iu, ju] >= thr
+        return pd.DataFrame({
+            "cluster_id": np.full(int(keep.sum()), key[0],
+                                  dtype="int32"),
+            "vec_a": ids[iu[keep]], "vec_b": ids[ju[keep]],
+            "cosine_9dp": R[iu, ju][keep]})
 
-        return asg.groupBy("cluster_id").applyInPandas(
-            per_cluster,
-            "cluster_id int, vec_a bigint, vec_b bigint,"
-            " cosine_9dp double")
-    a = asg.select(F.col("cluster_id"),
-                   F.col(id_col).alias("vec_a"),
-                   F.col("qv").alias("__qa"))
-    b = asg.select(F.col("cluster_id"),
-                   F.col(id_col).alias("vec_b"),
-                   F.col("qv").alias("__qb"))
-    pairs = (a.join(b, "cluster_id")
-             .filter(F.col("vec_a") < F.col("vec_b"))
-             .withColumn("__dab", _dot(F.col("__qa"), F.col("__qb")))
-             .withColumn("__daa", _dot(F.col("__qa"), F.col("__qa")))
-             .withColumn("__dbb", _dot(F.col("__qb"), F.col("__qb"))))
-    cos = F.expr(
-        "ROUND(CAST(__dab AS DOUBLE) / (SQRT(CAST(__daa AS DOUBLE))"
-        " * SQRT(CAST(__dbb AS DOUBLE))), 9)")
-    return (pairs.withColumn("cosine_9dp", cos)
-            .filter(F.col("cosine_9dp")
-                    >= threshold_ppb / 1_000_000_000.0)
-            .select("cluster_id", "vec_a", "vec_b", "cosine_9dp"))
+    return asg.groupBy("cluster_id").applyInPandas(
+        per_cluster,
+        "cluster_id int, vec_a bigint, vec_b bigint, cosine_9dp double")
 
 
 def ivf_trained_topk(emb: DataFrame, k: int = 10, n_cells: int = 16,
@@ -226,8 +167,8 @@ def ivf_trained_topk(emb: DataFrame, k: int = 10, n_cells: int = 16,
     broadcast centroid frame; candidates ride an equi-join on the
     cell id and only probed cells' members score. The quantized frame
     persists ONCE and feeds training, assignment, and the query slice
-    (ADVICE r11: three quantize_codes calls = three corpus-wide
-    dim_stats aggregates for one envelope)."""
+    (three quantize_codes calls would be three corpus-wide dim_stats
+    aggregates for one envelope)."""
     q = quantize_codes(emb, vec_col, id_col).persist()
     seeds = train_codebook(q, m_sub=1, n_codes=n_cells,
                            lloyd_rounds=rounds, id_col=id_col)
@@ -254,12 +195,12 @@ def ivf_trained_topk(emb: DataFrame, k: int = 10, n_cells: int = 16,
               .filter(F.col("__rn") <= n_probe)
               .select("query_id", "__qqv", "cell"))
     # Pin the PROBED side as the build side explicitly — without a
-    # hint the planner broadcast the CORPUS side (the post-window
-    # probed estimate is opaque; r12 plan audit, guide §3.1). probed
-    # is queries x n_probe = corpus/query_mod x n_probe WITH vectors —
-    # corpus-PROPORTIONAL, so the broadcast is size-gated on the base
-    # scan's stats (zero jobs) and degrades to SHUFFLE_HASH above the
-    # cap instead of OOMing the executors (VERDICT r12 item #1).
+    # hint the planner broadcasts the CORPUS side (the post-window
+    # probed estimate is opaque). probed is queries x n_probe =
+    # corpus/query_mod x n_probe WITH vectors — corpus-PROPORTIONAL,
+    # so the broadcast is size-gated on the base scan's stats (zero
+    # jobs) and degrades to SHUFFLE_HASH above the cap instead of
+    # OOMing the executors.
     probed_est = plan_bytes(emb) * n_probe / query_mod
     cand = (gated_broadcast(probed, probed_est).join(assigned, "cell")
             .filter(F.col("query_id") != F.col("__nid")))
@@ -280,8 +221,7 @@ def ivf_split_contamination(emb: DataFrame, split_expr,
                             threshold_ppb: int = 990_000_000,
                             id_col: str = "vec_id",
                             vec_col: str = "embedding",
-                            train_value: str = "train",
-                            use_arrow: bool = True) -> DataFrame:
+                            train_value: str = "train") -> DataFrame:
     """Embedding-space CONTAMINATION audit — the semantic analog of
     the lexical split-leakage check (split_leakage_near_dup flags
     near-dup TEXT straddling a train/eval split; a paraphrase shares
@@ -297,24 +237,17 @@ def ivf_split_contamination(emb: DataFrame, split_expr,
     envelope — the production shape: the quantizer is trained once,
     splits share it); Lloyd training, cell assignment and the probe
     are the ivf_trained_topk integer path restricted to the train
-    split; the cosine is exact BIGINT dots into ONE ROUND(x, 9).
+    split; the cosine is exact BIGINT dots into ONE 9dp half-up pin
+    (the semdedup_pairs spelling).
 
     Scale shape: identical to ivf_trained_topk (bounded Lloyd loop,
     one Arrow assignment pass over the train split, n_cells-row
-    broadcast centroid probe, candidates ride the cell equi-join) —
-    the eval set is the small side by construction (5-10% of the
-    corpus) and never joins the full train split, only probed cells'
-    members.
-
-    `use_arrow=True` (the registered path) scores each probed cell
-    with ONE BLAS kernel per (cell x its probing anchors) cogroup —
-    exact int64 Q @ V.T, the float steps in the JVM twin's order,
-    the semdedup 9dp half-up pin (bit-parity asserted there at the
-    .5 boundary) — and emits only the per-cell best per anchor, so
-    the global rerank window sees n_probe rows per anchor instead of
-    every candidate (the interpreted zip_with expression plan below
-    stays as the parity twin; 1M-row probe: 314 s -> the kernel
-    path, see tools/scale_probe.py:contamination)."""
+    broadcast centroid probe) — the eval set is the small side by
+    construction (5-10% of the corpus) and never joins the full train
+    split. Each probed cell is scored by ONE BLAS kernel per (cell x
+    its probing anchors) cogroup — exact int64 Q @ V.T — which emits
+    only the per-cell best per anchor, so the global rerank window
+    sees n_probe rows per anchor instead of every candidate."""
     q = (quantize_codes(emb, vec_col, id_col)
          .withColumn("__split", split_expr)
          .persist())
@@ -342,79 +275,47 @@ def ivf_split_contamination(emb: DataFrame, split_expr,
                   .orderBy(F.col("__d"), F.col("cell"))))
               .filter(F.col("__rn") <= n_probe)
               .select("query_id", "query_split", "__qqv", "cell"))
+
+    def per_cell(cpdf, qpdf):
+        import numpy as np
+        import pandas as pd
+        empty = pd.DataFrame({
+            "query_id": pd.Series(dtype="int64"),
+            "query_split": pd.Series(dtype="object"),
+            "neighbor_id": pd.Series(dtype="int64"),
+            "cosine_9dp": pd.Series(dtype="float64")})
+        if not len(cpdf) or not len(qpdf):
+            return empty
+        nid = cpdf["__nid"].to_numpy().astype(np.int64)
+        V = np.stack(cpdf["__nqv"].to_numpy()).astype(np.int64)
+        Q = np.stack(qpdf["__qqv"].to_numpy()).astype(np.int64)
+        G = Q @ V.T          # exact: |qv| <= 127, dims bounded
+        daa = (Q * Q).sum(axis=1).astype(np.float64)
+        dbb = (V * V).sum(axis=1).astype(np.float64)
+        C = G.astype(np.float64) / (np.sqrt(daa)[:, None]
+                                    * np.sqrt(dbb)[None, :])
+        R = np.sign(C) * (np.floor(np.abs(C) * 1e9 + 0.5) / 1e9)
+        best = np.lexsort((np.broadcast_to(nid, R.shape), -R),
+                          axis=1)[:, 0]
+        rows = np.arange(len(Q))
+        return pd.DataFrame({
+            "query_id": qpdf["query_id"].to_numpy(),
+            "query_split": qpdf["query_split"].to_numpy(),
+            "neighbor_id": nid[best],
+            "cosine_9dp": R[rows, best]})
+
+    locals_ = (assigned.groupBy("cell")
+               .cogroup(probed.groupBy("cell"))
+               .applyInPandas(
+                   per_cell,
+                   "query_id long, query_split string,"
+                   " neighbor_id long, cosine_9dp double"))
+    wl = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_9dp").desc(), F.col("neighbor_id"))
     thr = threshold_ppb / 1_000_000_000.0
-    if use_arrow:
-        import numpy as np  # noqa: F401
-        import pandas as pd  # noqa: F401
-
-        def per_cell(cpdf, qpdf):
-            import numpy as np
-            import pandas as pd
-            empty = pd.DataFrame({
-                "query_id": pd.Series(dtype="int64"),
-                "query_split": pd.Series(dtype="object"),
-                "neighbor_id": pd.Series(dtype="int64"),
-                "cosine_9dp": pd.Series(dtype="float64")})
-            if not len(cpdf) or not len(qpdf):
-                return empty
-            nid = cpdf["__nid"].to_numpy().astype(np.int64)
-            V = np.stack(cpdf["__nqv"].to_numpy()).astype(np.int64)
-            Q = np.stack(qpdf["__qqv"].to_numpy()).astype(np.int64)
-            G = Q @ V.T          # exact: |qv| <= 127, dims bounded
-            daa = (Q * Q).sum(axis=1).astype(np.float64)
-            dbb = (V * V).sum(axis=1).astype(np.float64)
-            C = G.astype(np.float64) / (np.sqrt(daa)[:, None]
-                                        * np.sqrt(dbb)[None, :])
-            R = np.sign(C) * (np.floor(np.abs(C) * 1e9 + 0.5) / 1e9)
-            best = np.lexsort((np.broadcast_to(nid, R.shape), -R),
-                              axis=1)[:, 0]
-            rows = np.arange(len(Q))
-            return pd.DataFrame({
-                "query_id": qpdf["query_id"].to_numpy(),
-                "query_split": qpdf["query_split"].to_numpy(),
-                "neighbor_id": nid[best],
-                "cosine_9dp": R[rows, best]})
-
-        locals_ = (assigned.groupBy("cell")
-                   .cogroup(probed.groupBy("cell"))
-                   .applyInPandas(
-                       per_cell,
-                       "query_id long, query_split string,"
-                       " neighbor_id long, cosine_9dp double"))
-        wl = Window.partitionBy("query_id").orderBy(
-            F.col("cosine_9dp").desc(), F.col("neighbor_id"))
-        return (locals_
-                .withColumn("__rk", F.row_number().over(wl))
-                .filter(F.col("__rk") == 1)
-                .select("query_id", "query_split", "neighbor_id",
-                        "cosine_9dp",
-                        (F.col("cosine_9dp") >= thr)
-                        .alias("contaminated")))
-    # eval-anchor side: held-out fraction x n_probe with vectors —
-    # corpus-proportional (5-10% of a 100 TB corpus); same gate as
-    # ivf_trained_topk, with frac=1 (the split selectivity is opaque
-    # to Catalyst, so the conservative estimate is the full scan)
-    cand = gated_broadcast(
-        probed, plan_bytes(emb) * n_probe).join(assigned, "cell")
-    cos = F.expr(
-        "ROUND(CAST(__dab AS DOUBLE) / (SQRT(CAST(__daa AS DOUBLE))"
-        " * SQRT(CAST(__dbb AS DOUBLE))), 9)")
-    scored = (cand
-              .withColumn("__dab", _dot(F.col("__qqv"),
-                                        F.col("__nqv")))
-              .withColumn("__daa", _dot(F.col("__qqv"),
-                                        F.col("__qqv")))
-              .withColumn("__dbb", _dot(F.col("__nqv"),
-                                        F.col("__nqv")))
-              .withColumn("cosine_9dp", cos))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_9dp").desc(), F.col("__nid"))
-    return (scored
-            .withColumn("__rk", F.row_number().over(w))
+    return (locals_
+            .withColumn("__rk", F.row_number().over(wl))
             .filter(F.col("__rk") == 1)
-            .select("query_id", "query_split",
-                    F.col("__nid").alias("neighbor_id"),
+            .select("query_id", "query_split", "neighbor_id",
                     "cosine_9dp",
-                    (F.col("cosine_9dp")
-                     >= threshold_ppb / 1_000_000_000.0)
-                    .alias("contaminated")))
+                    (F.col("cosine_9dp") >= thr).alias("contaminated")))

@@ -1,15 +1,23 @@
 """Similarity search over embeddings (SURVEY.md section 2.12):
-brute-force cosine top-k (the exactness baseline) and an LSH-bucketed
-approximate variant (the scale path).
+brute-force cosine top-k (the exactness baseline), LSH- and
+IVF-bucketed approximate variants (the scale paths), hard-negative
+mining and LSH semantic dedup.
 
 Scale design: brute force is O(Q x N) — correct for small query sets /
 reranking; the LSH variant hashes vectors into sign-pattern buckets
 with deterministic hyperplanes so candidate generation is an equi-join
 on the bucket key (sub-linear probe per query at 100 TB, standard
-recall/latency trade).
+recall/latency trade); IVF probes the n_probe nearest of n_cells
+centroid cells.
 
-All vector math is `F.aggregate`/`F.zip_with` column expressions over
-array<double> — JVM-side, no Python serialization per row.
+Each operator has ONE execution path. Dense all-pairs scoring (the
+brute-force top-k, near-dup pairs, hard negatives, IVF cell
+assignment) runs as BLAS matmuls over Arrow batches, because Spark's
+`F.aggregate`/`F.zip_with` folds evaluate interpreted per element;
+candidate-pair rescoring after an equi-join stays a JVM column
+expression. Every cosine is pinned to fixed decimals half away from
+zero — DuckDB's ROUND, which the oracles use — before it ranks, so
+order and the driver hash are immune to last-ulp float noise.
 """
 
 from __future__ import annotations
@@ -57,7 +65,7 @@ def _parquet_num_rows(path: str) -> int:
     """Corpus cardinality from the parquet footer(s) — a driver-side
     metadata read (no Spark job). The broadcast-vs-tiled dispatch only
     needs the row count; running `corpus.count()` for it costs a full
-    scan job that dominated the sf0.1 bench (VERDICT r2 finding #1)."""
+    scan job that dominated the sf0.1 bench."""
     import pyarrow.parquet as pq
     return sum(pq.ParquetFile(f).metadata.num_rows
                for f in _parquet_files(path))
@@ -108,8 +116,9 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int,
                 corpus_path: str | None = None) -> DataFrame:
     """Brute-force cosine top-k: for every query vector, the k nearest
     corpus vectors (self excluded). Cosine is rounded to 6 decimals
-    before ranking so order (and the driver hash) is immune to last-ulp
-    float noise; ties break on corpus id.
+    half away from zero (DuckDB's ROUND — np.round would round half to
+    even) before ranking so order (and the driver hash) is immune to
+    last-ulp float noise; ties break on corpus id.
 
     Two physical strategies, same exact result:
 
@@ -180,7 +189,9 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int,
                 qm = np.array(list(pdf["qv"]), dtype=np.float64)
                 qids = pdf["qid"].to_numpy()
                 qnorms = np.sqrt((qm * qm).sum(axis=1))
-                sims = np.round((qm @ cmat.T) / np.outer(qnorms, cnorms), 6)
+                cos = (qm @ cmat.T) / np.outer(qnorms, cnorms)
+                sims = np.sign(cos) * (np.floor(np.abs(cos) * 1e6 + 0.5)
+                                     / 1e6)
                 frame = topk_frame(qids, sims, cids)
                 # whole corpus in one tile -> per-query rank is already
                 # final; no rerank shuffle needed
@@ -207,7 +218,8 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int,
         qm = np.array(list(qpdf["qv"]), dtype=np.float64)
         qids = qpdf["qid"].to_numpy()
         qnorms = np.sqrt((qm * qm).sum(axis=1))
-        sims = np.round((qm @ cmat.T) / np.outer(qnorms, cnorms), 6)
+        cos = (qm @ cmat.T) / np.outer(qnorms, cnorms)
+        sims = np.sign(cos) * (np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6)
         return topk_frame(qids, sims, cids)
 
     scored = (c.groupBy("tile").cogroup(qx.groupBy("tile"))
@@ -272,8 +284,7 @@ def ann_cosine_topk(queries: DataFrame, corpus: DataFrame, k: int, dim: int,
     # §3.1), but size-gate the hint: the query frame scales with the
     # caller's slice, and Catalyst's conservative estimate (filters
     # keep the child scan's size) makes the gate err toward
-    # shuffle-hash at scale instead of an executor OOM (VERDICT r12
-    # item #1)
+    # shuffle-hash at scale instead of an executor OOM
     n_probes = (n_planes + 1) if multiprobe >= 1 else 1
     scored = (
         gated_broadcast(qb, plan_bytes(queries) * n_probes)
@@ -352,8 +363,9 @@ def cosine_near_dup_pairs(vectors: DataFrame, threshold: float,
                 q = np.array(list(pdf["v"]), dtype=np.float64)
                 qids = pdf["qid"].to_numpy()
                 qnorms = np.sqrt((q * q).sum(axis=1))
-                sims = (q @ cmat.T) / np.outer(qnorms, cnorms)
-                sims = np.round(sims, 6)
+                cos = (q @ cmat.T) / np.outer(qnorms, cnorms)
+                sims = np.sign(cos) * (np.floor(np.abs(cos) * 1e6 + 0.5)
+                                     / 1e6)
                 qi, ci = np.nonzero((sims >= threshold)
                                     & (qids[:, None] < cids[None, :]))
                 yield pd.DataFrame({"id_a": qids[qi], "id_b": cids[ci],
@@ -385,7 +397,8 @@ def cosine_near_dup_pairs(vectors: DataFrame, threshold: float,
         qm = np.array(list(qpdf["qv"]), dtype=np.float64)
         qids = qpdf["qid"].to_numpy()
         qnorms = np.sqrt((qm * qm).sum(axis=1))
-        sims = np.round((qm @ cmat.T) / np.outer(qnorms, cnorms), 6)
+        cos = (qm @ cmat.T) / np.outer(qnorms, cnorms)
+        sims = np.sign(cos) * (np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6)
         qi, ci = np.nonzero((sims >= threshold)
                             & (qids[:, None] < cids[None, :]))
         return pd.DataFrame({"id_a": qids[qi], "id_b": cids[ci],
@@ -399,18 +412,23 @@ def ivf_cosine_topk(queries: DataFrame, corpus: DataFrame, k: int,
                     n_cells: int = 16, n_probe: int = 4,
                     id_col: str = "vec_id",
                     vec_col: str = "embedding",
-                    lloyd_rounds: int = 1,
-                    use_arrow: bool = True) -> DataFrame:
+                    lloyd_rounds: int = 1) -> DataFrame:
     """IVF (inverted-file) approximate top-k: corpus vectors are
     assigned to their nearest centroid cell once; a query probes its
     n_probe nearest cells and reranks exactly inside them.
 
     Centroid init is the first n_cells corpus vectors (deterministic),
-    refined by `lloyd_rounds` k-means passes: broadcast centroids,
-    argmax-cosine assign, element-wise mean per cell (posexplode +
-    (cell, pos) hash agg — all JVM-side, one shuffle per round, same
-    plan shape at any corpus size). Refined centroids balance the cells,
-    which is what recall rides on.
+    refined by `lloyd_rounds` k-means passes: argmax-cosine assign,
+    then an element-wise mean per cell (posexplode + (cell, pos) hash
+    agg, one shuffle per round, same plan shape at any corpus size)
+    whose <= n_cells rows collect as the next centroids. A cell the
+    round empties drops while the survivors keep their cell ids.
+    Refined centroids balance the cells, which is what recall rides
+    on. Every assignment (Lloyd members, corpus cells, query probes)
+    is the BLAS kernel pq.ivf_cells_arrow — one (batch x cells)
+    similarity matrix per Arrow chunk — with emit_vec, so the member
+    mean and the final rerank consume the vector without a join back
+    onto the corpus.
     Probe cost at scale: n_probe/n_cells of the corpus per query, as an
     equi-join on cell id — no cross product.
 
@@ -421,100 +439,7 @@ def ivf_cosine_topk(queries: DataFrame, corpus: DataFrame, k: int,
     the whole pipeline — init, Lloyd refinement, cell assignment,
     probing, rerank — reproducible bit-for-bit in ANSI SQL, so even
     this 'approximate' index is DuckDB-oracle-checked).
-
-    Execution path (VERDICT r9 item #2): `use_arrow=True` (default)
-    replaces the three corpus x cells crossJoin assignments (Lloyd
-    member assignment, corpus cell assignment, query probing) with
-    the BLAS kernel pq.ivf_cells_arrow — one (batch x cells)
-    similarity matrix per Arrow chunk, 9 dp rounding and
-    smaller-cell ties bit-matching F.round + the window tiebreak
-    (parity asserted by the ivfpq scale probe). Per Lloyd round the
-    refined centroids collect (bounded: <= n_cells rows). The
-    `use_arrow=False` branch keeps the pure-JVM expression plan the
-    SQL oracle mirrors shape-for-shape; results are equal either way.
     """
-    if use_arrow:
-        return _ivf_cosine_topk_arrow(queries, corpus, k, n_cells,
-                                      n_probe, id_col, vec_col,
-                                      lloyd_rounds)
-    # cell id = rank of the seed vector by id (explicit row_number, not
-    # monotonically_increasing_id whose values are partition-layout
-    # dependent; the global window runs over n_cells rows only)
-    cents = (corpus.orderBy(id_col).limit(n_cells)
-             .select((F.row_number().over(Window.orderBy(id_col)) - 1)
-                     .cast("long").alias("cell"),
-                     as_double(F.col(vec_col)).alias("centroid")))
-    cents = F.broadcast(cents)
-
-    for _ in range(lloyd_rounds):
-        # the row key for the per-vector argmax is the corpus id itself
-        # (stringifying the 64-dim array per row per round, as an
-        # earlier version did, costs more than the cosine it keys)
-        av = corpus.select(F.col(id_col).alias("__rid"),
-                           as_double(F.col(vec_col)).alias("v"))
-        w_assign = Window.partitionBy("__rid").orderBy(
-            F.col("sim").desc(), F.col("cell"))
-        assigned = (
-            av.crossJoin(cents)
-            .withColumn("sim",
-                        F.round(cosine(F.col("v"), F.col("centroid")), 9))
-            .withColumn("rnk", F.row_number().over(w_assign))
-            .filter(F.col("rnk") == 1)
-            .select("cell", "v"))
-        per_dim = (assigned
-                   .select("cell", F.posexplode("v").alias("pos", "x"))
-                   .groupBy("cell", "pos")
-                   .agg(F.round(F.avg("x"), 9).alias("m")))
-        cents = (per_dim.groupBy("cell")
-                 .agg(F.array_sort(F.collect_list(F.struct("pos", "m")))
-                      .alias("pm"))
-                 .select("cell",
-                         F.transform("pm", lambda s: s["m"]).alias("centroid")))
-        cents = F.broadcast(cents)
-
-    def assign(df, vec, keep, n_cells_kept):
-        scored = (df.crossJoin(cents)
-                  .withColumn("sim",
-                              F.round(cosine(vec, F.col("centroid")), 9))
-                  .withColumn("rnk", F.row_number().over(
-                      Window.partitionBy(*keep).orderBy(
-                          F.col("sim").desc(), F.col("cell"))))
-                  .filter(F.col("rnk") <= n_cells_kept))
-        return scored.select(*keep, "cell")
-
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      as_double(F.col(vec_col)).alias("cv"))
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       as_double(F.col(vec_col)).alias("qv"))
-    c_cells = assign(c, F.col("cv"), ["neighbor_id", "cv"], 1)
-    q_cells = assign(q, F.col("qv"), ["query_id", "qv"], n_probe)
-    # probed query cells carry full vectors and scale with the query
-    # frame — size-gated build-side pin (VERDICT r12 item #1)
-    scored = (gated_broadcast(q_cells, plan_bytes(queries) * n_probe)
-              .join(c_cells, "cell")
-              .filter(F.col("query_id") != F.col("neighbor_id"))
-              .dropDuplicates(["query_id", "neighbor_id"])
-              .withColumn("cosine",
-                          F.round(cosine(F.col("qv"), F.col("cv")), 6)))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cosine", "rank"))
-
-
-def _ivf_cosine_topk_arrow(queries: DataFrame, corpus: DataFrame,
-                           k: int, n_cells: int, n_probe: int,
-                           id_col: str, vec_col: str,
-                           lloyd_rounds: int) -> DataFrame:
-    """Arrow-kernel body of ivf_cosine_topk (same output, see its
-    docstring): assignment runs through pq.ivf_cells_arrow with
-    emit_vec so the Lloyd member-mean aggregate and the final rerank
-    consume the vector without a join back onto the corpus; the
-    per-dim mean stays the same JVM hash aggregate (round 9 dp), and
-    an emptied cell drops from the collected centroid list while
-    survivors keep their cell ids — exactly the JVM twin's
-    semantics."""
     from event_streaming_service_spark.operators.pq import (
         ivf_cells_arrow)
 
@@ -553,7 +478,8 @@ def _ivf_cosine_topk_arrow(queries: DataFrame, corpus: DataFrame,
     q_cells = ivf_cells_arrow(q, cents, n_probe, id_col="query_id",
                               vec_col="qv", cell_ids=cell_ids,
                               emit_vec=True)
-    # same size-gated build-side pin as the JVM twin above
+    # probed query cells carry full vectors and scale with the query
+    # frame — size-gated build-side pin
     scored = (gated_broadcast(q_cells, plan_bytes(queries) * n_probe)
               .join(c_cells, "cell")
               .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -567,49 +493,10 @@ def _ivf_cosine_topk_arrow(queries: DataFrame, corpus: DataFrame,
             .select("query_id", "neighbor_id", "cosine", "rank"))
 
 
-def bucket_pairs_arrow(bucketed: DataFrame, threshold: float) -> DataFrame:
-    """Arrow/numpy twin of the in-bucket pair generation inside
-    semantic_dedup_clusters: per LSH bucket, one BLAS gram matrix
-    (V @ V.T) replaces the bucket self-join's interpreted
-    aggregate-zip cosine — Spark's higher-order lambdas evaluate per
-    element (~40x slower than vectorized numpy; the 1M-vector scale
-    probe spent >10 min expression-side, ~1 min here). Input:
-    (__id, __v double array, __bucket); output (id_a < id_b) pairs
-    with 6 dp-rounded cosine >= threshold.
-
-    Rounding matches F.round's HALF_UP away-from-zero exactly
-    (floor(|x|·1e6 + 0.5)·sign); BLAS accumulation order can differ
-    from the JVM fold by last-ulp amounts, so agreement after
-    rounding is exact except for cosines within float error of a
-    half-microunit boundary — the scale probe asserts equality on its
-    planted corpus, and the oracle-gated query keeps the JVM path."""
-    import numpy as np
-    import pandas as pd  # noqa: F401 (worker-side)
-
-    def gen(key, pdf):
-        import pandas as pd
-
-        ids = pdf["__id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        V = np.stack(pdf["__v"].to_numpy())[order].astype(np.float64)
-        norms = np.linalg.norm(V, axis=1)
-        s = (V @ V.T) / np.outer(norms, norms)
-        r = np.sign(s) * (np.floor(np.abs(s) * 1e6 + 0.5) / 1e6)
-        iu = np.triu_indices(len(ids), k=1)
-        keep = r[iu] >= threshold
-        return pd.DataFrame({"id_a": ids[iu[0][keep]],
-                             "id_b": ids[iu[1][keep]]})
-
-    return bucketed.groupBy("__bucket").applyInPandas(
-        gen, "id_a long, id_b long")
-
-
 def semantic_dedup_clusters(vectors: DataFrame, threshold: float,
                             dim: int, n_planes: int = 8,
                             id_col: str = "vec_id",
-                            vec_col: str = "embedding",
-                            use_arrow: bool = False) -> DataFrame:
+                            vec_col: str = "embedding") -> DataFrame:
     """Semantic (embedding-space) dedup end to end: LSH-bucketed
     candidate pairs -> exact cosine >= threshold -> connected
     components -> one canonical survivor per cluster. One row per
@@ -622,13 +509,16 @@ def semantic_dedup_clusters(vectors: DataFrame, threshold: float,
     cross product — a bucket of d vectors emits d(d-1)/2 pairs, and
     the sign-pattern space 2^n_planes keeps buckets small; raise
     n_planes as the corpus grows); cosine is a codegen'd
-    aggregate-zip expression, rounded to 6dp so both engines rank the
-    identical values; components run on the tiny pair graph only
-    (min-label propagation with lineage checkpoints); the corpus is
-    scanned once and never shuffled — final assignment is a broadcast
-    left join, exactly as in the MinHash variant. The deterministic
-    hyperplane lattice gives the WHOLE approximate pipeline an exact
-    SQL twin (same argument as _ann_lsh_oracle).
+    aggregate-zip expression — a sequential fold, like the oracle's —
+    rounded to 6dp so both engines rank the identical values (a BLAS
+    Gram per bucket is faster, but its accumulation order can move a
+    cosine across a 6 dp boundary); components run on the tiny pair
+    graph only (min-label propagation
+    with lineage checkpoints); the corpus is scanned once and never
+    shuffled — final assignment is a broadcast left join, exactly as
+    in the MinHash variant. The deterministic hyperplane lattice gives
+    the WHOLE approximate pipeline an exact SQL twin (same argument as
+    _ann_lsh_oracle).
     """
     from event_streaming_service_spark.operators.dedup import (
         connected_components)
@@ -636,22 +526,16 @@ def semantic_dedup_clusters(vectors: DataFrame, threshold: float,
                        as_double(F.col(vec_col)).alias("__v"))
     b = v.withColumn("__bucket",
                      lsh_bucket(F.col("__v"), dim, n_planes)).cache()
-    if use_arrow:
-        # corpus-scale hot path: one gram matrix per bucket
-        # (bucket_pairs_arrow) instead of the bucket self-join's
-        # per-element interpreted cosine
-        pairs = bucket_pairs_arrow(b, threshold)
-    else:
-        pairs = (b.alias("a")
-                 .join(b.alias("c"),
-                       (F.col("a.__bucket") == F.col("c.__bucket"))
-                       & (F.col("a.__id") < F.col("c.__id")))
-                 .select(F.col("a.__id").alias("id_a"),
-                         F.col("c.__id").alias("id_b"),
-                         F.round(cosine(F.col("a.__v"), F.col("c.__v")),
-                                 6).alias("__cos"))
-                 .filter(F.col("__cos") >= threshold)
-                 .select("id_a", "id_b"))
+    pairs = (b.alias("a")
+             .join(b.alias("c"),
+                   (F.col("a.__bucket") == F.col("c.__bucket"))
+                   & (F.col("a.__id") < F.col("c.__id")))
+             .select(F.col("a.__id").alias("id_a"),
+                     F.col("c.__id").alias("id_b"),
+                     F.round(cosine(F.col("a.__v"), F.col("c.__v")),
+                             6).alias("__cos"))
+             .filter(F.col("__cos") >= threshold)
+             .select("id_a", "id_b"))
     cc_stats: dict = {}
     comp = connected_components(pairs, "id_a", "id_b",
                                 stats_out=cc_stats).cache()
@@ -659,7 +543,7 @@ def semantic_dedup_clusters(vectors: DataFrame, threshold: float,
     sizes = comp.groupBy("component").agg(F.count("*").alias("__sz"))
     # membership broadcasts row-count-gated on the CC loop's free node
     # count — duplicate-fraction-proportional frames must not carry an
-    # unconditional hint (VERDICT r12 item #3)
+    # unconditional hint
     return (vectors.select(F.col(id_col).alias("vec_id"))
             .join(gated_broadcast_rows(
                 comp.withColumnRenamed("node", "vec_id"),
@@ -737,9 +621,9 @@ def knn_label_vote(emb: DataFrame, k: int = 10, n_query: int = 8,
     labels = emb.select(F.col(id_col).alias("neighbor_id"),
                         F.col(label_col).alias("__nl"))
     # broadcast the k x n_query NEIGHBOR set (bounded by constants),
-    # never the corpus-sized label dimension — the former
-    # F.broadcast(labels) shipped one row per corpus vector (VERDICT
-    # r12 item #1's class; inner join, so side order is free)
+    # never the corpus-sized label dimension (F.broadcast(labels)
+    # would ship one row per corpus vector; inner join, so side order
+    # is free)
     votes = (labels.join(F.broadcast(top), "neighbor_id")
              .groupBy("query_id", "__nl")
              .agg(F.count(F.lit(1)).alias("votes")))
@@ -837,110 +721,71 @@ def beam_search_topk(emb: DataFrame, k: int = 5, n_query: int = 8,
 def hard_negative_topk(emb: DataFrame, k: int = 5,
                        query_mod: int = 125, id_col: str = "vec_id",
                        vec_col: str = "embedding",
-                       label_col: str = "label",
-                       use_arrow: bool = True) -> DataFrame:
+                       label_col: str = "label") -> DataFrame:
     """Hard-negative mining — the contrastive-training data-prep step
     (for every anchor, the most-similar vectors of a DIFFERENT class
     are the informative negatives; random negatives carry almost no
     gradient): per query vector, the top-k nearest neighbors whose
-    label differs, cosine pinned to 6dp before ranking (the
-    cosine_topk convention) with a neighbor-id tiebreak.
+    label differs, cosine pinned to 6dp half away from zero before
+    ranking (the cosine_topk convention) with a neighbor-id tiebreak.
 
-    The label filter runs BEFORE ranking (a post-filter on an
-    unfiltered top-k would lose negatives behind same-class hits).
-    Scale shape: the anchor set broadcasts (it is small by design —
-    the mining query's contract), the corpus scans once, and the only
-    shuffle is the per-query top-k rerank window over the k-per-batch
-    candidates.
+    Scale shape: the anchor set (ids divisible by `query_mod`) is
+    small by design — the mining query's contract — so its matrix is
+    collected and broadcast, and each corpus Arrow batch is scored
+    with ONE BLAS matmul. The label filter applies INSIDE the kernel,
+    per anchor, BEFORE the batch-local top-k (a post-filter on an
+    unfiltered top-k would lose negatives behind same-class hits);
+    the corpus scans once, and the only shuffle is the per-query
+    top-k rerank window over the k-per-batch candidates."""
+    import numpy as np
 
-    `use_arrow=True` (the registered path — VERDICT r11 item #5:
-    the expression form scored every (corpus x anchor) row with
-    interpreted zip_with lambdas) broadcasts the collected anchor
-    matrix and scores each corpus Arrow batch with ONE BLAS matmul;
-    the label filter applies INSIDE the kernel, per anchor, before
-    the batch-local top-k, so recall is identical to the expression
-    twin below (kept as the parity reference, asserted equal by
-    tests/test_round11_ops.py)."""
     base = emb.select(F.col(id_col), F.col(label_col).alias("__l"),
                       as_double(F.col(vec_col)).alias("__v"))
-    q = (base.filter(F.col(id_col) % query_mod == 0)
-         .select(F.col(id_col).alias("query_id"),
-                 F.col("__l").alias("query_label"),
-                 F.col("__v").alias("__qv")))
-    if use_arrow:
+    rows = (base.filter(F.col(id_col) % query_mod == 0)
+            .orderBy(id_col).collect())
+    qids = np.array([r[0] for r in rows], dtype=np.int64)
+    qlabels = np.array([r[1] for r in rows], dtype=np.int64)
+    qmat = np.array([r[2] for r in rows], dtype=np.float64)
+    qnorms = np.sqrt((qmat * qmat).sum(axis=1))
+    b = emb.sparkSession.sparkContext.broadcast(
+        (qids, qlabels, qmat, qnorms))
+
+    def score(batches):
         import numpy as np
-        import pandas as pd  # noqa: F401
-        rows = q.orderBy("query_id").collect()
-        qids = np.array([r[0] for r in rows], dtype=np.int64)
-        qlabels = np.array([r[1] for r in rows], dtype=np.int64)
-        qmat = np.array([r[2] for r in rows], dtype=np.float64)
-        qnorms = np.sqrt((qmat * qmat).sum(axis=1))
-        b = emb.sparkSession.sparkContext.broadcast(
-            (qids, qlabels, qmat, qnorms))
+        import pandas as pd
+        aqids, aqlabels, aqmat, aqnorms = b.value
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            cids = pdf.iloc[:, 0].to_numpy().astype(np.int64)
+            clab = pdf["__l"].to_numpy().astype(np.int64)
+            cm = np.array(list(pdf["__v"]), dtype=np.float64)
+            cnorms = np.sqrt((cm * cm).sum(axis=1))
+            cos = (aqmat @ cm.T) / np.outer(aqnorms, cnorms)
+            sims = np.sign(cos) * (np.floor(np.abs(cos) * 1e6 + 0.5)
+                                   / 1e6)
+            out = []
+            for j in range(len(aqids)):
+                mask = (clab != aqlabels[j]) & (cids != aqids[j])
+                order = np.lexsort((cids[mask], -sims[j][mask]))[:k]
+                out.append(pd.DataFrame({
+                    "query_id": aqids[j],
+                    "query_label": int(aqlabels[j]),
+                    "neighbor_id": cids[mask][order],
+                    "neighbor_label": clab[mask][order],
+                    "cosine": sims[j][mask][order]}))
+            if out:
+                yield pd.concat(out, ignore_index=True)
 
-        def score(batches):
-            import numpy as np
-            import pandas as pd
-            aqids, aqlabels, aqmat, aqnorms = b.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                cids = pdf.iloc[:, 0].to_numpy().astype(np.int64)
-                clab = pdf["__l"].to_numpy().astype(np.int64)
-                cm = np.array(list(pdf["__v"]), dtype=np.float64)
-                cnorms = np.sqrt((cm * cm).sum(axis=1))
-                sims = np.round((aqmat @ cm.T)
-                                / np.outer(aqnorms, cnorms), 6)
-                out = []
-                for j in range(len(aqids)):
-                    mask = ((clab != aqlabels[j])
-                            & (cids != aqids[j]))
-                    order = np.lexsort(
-                        (cids[mask], -sims[j][mask]))[:k]
-                    out.append(pd.DataFrame({
-                        "query_id": aqids[j],
-                        "query_label": int(aqlabels[j]),
-                        "neighbor_id": cids[mask][order],
-                        "neighbor_label": clab[mask][order],
-                        "cosine": sims[j][mask][order]}))
-                if out:
-                    yield pd.concat(out, ignore_index=True)
-
-        from event_streaming_service_spark.operators.text import fan_out
-        scored = fan_out(base).mapInPandas(
-            score,
-            "query_id long, query_label int, neighbor_id long,"
-            " neighbor_label int, cosine double")
-        wf = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id"))
-        return (scored
-                .withColumn("rank",
-                            F.row_number().over(wf).cast("int"))
-                .filter(F.col("rank") <= k)
-                .select("query_id", "query_label", "neighbor_id",
-                        "neighbor_label", "cosine", "rank"))
-
-    def dot(a, b):
-        return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                           F.lit(0.0), lambda acc, x: acc + x)
-
-    # anchor slice = corpus/query_mod with vectors — size-gated like
-    # every query-slice broadcast (VERDICT r12 item #1); a cross join
-    # has no shuffle-hash form, so above the cap the planner decides
-    pairs = (base.crossJoin(gated_broadcast(
-                 q, plan_bytes(emb) / query_mod, fallback="none"))
-             .filter((F.col("__l") != F.col("query_label"))
-                     & (F.col(id_col) != F.col("query_id"))))
-    cos = F.round(
-        dot(F.col("__qv"), F.col("__v"))
-        / (F.sqrt(dot(F.col("__qv"), F.col("__qv")))
-           * F.sqrt(dot(F.col("__v"), F.col("__v")))), 6)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col(id_col))
-    return (pairs.withColumn("cosine", cos)
-            .withColumn("rank", F.row_number().over(w).cast("int"))
+    from event_streaming_service_spark.operators.text import fan_out
+    scored = fan_out(base).mapInPandas(
+        score,
+        "query_id long, query_label int, neighbor_id long,"
+        " neighbor_label int, cosine double")
+    wf = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id"))
+    return (scored
+            .withColumn("rank", F.row_number().over(wf).cast("int"))
             .filter(F.col("rank") <= k)
-            .select("query_id", "query_label",
-                    F.col(id_col).alias("neighbor_id"),
-                    F.col("__l").alias("neighbor_label"),
-                    "cosine", "rank"))
+            .select("query_id", "query_label", "neighbor_id",
+                    "neighbor_label", "cosine", "rank"))

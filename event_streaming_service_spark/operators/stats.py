@@ -202,7 +202,10 @@ def topic_dashboard(events_coords: DataFrame) -> DataFrame:
     6x wall versus splitting. So: one pass for the row aggregates +
     percentiles, a two-level aggregate for the distinct counts (the
     (topic, event_id) level map-side combines before its shuffle), then
-    a broadcast join of the two per-topic results (#topics rows each).
+    a broadcast left join of the two per-topic results (#topics rows
+    each). Like COUNT(DISTINCT), the distinct level skips NULL ids; a
+    topic whose ids are all NULL has no distinct row and counts 0, and
+    a NULL topic is one group, as in SQL's GROUP BY.
     """
     base = (
         events_coords.groupBy("topic")
@@ -220,10 +223,17 @@ def topic_dashboard(events_coords: DataFrame) -> DataFrame:
         )
     )
     distinct = (
-        events_coords.groupBy("topic", "event_id").agg(F.count("*").alias("__n"))
-        .groupBy("topic").agg(F.count("*").alias("distinct_events"))
+        events_coords.where(F.col("event_id").isNotNull())
+        .groupBy("topic", "event_id").agg(F.count("*").alias("__n"))
+        .groupBy(F.col("topic").alias("__t"))
+        .agg(F.count("*").alias("distinct_events"))
     )
-    return (base.join(F.broadcast(distinct), "topic")
+    # null-safe: GROUP BY keeps a NULL topic as a group of its own
+    return (base.join(F.broadcast(distinct),
+                      F.col("topic").eqNullSafe(F.col("__t")), "left")
+            .drop("__t")
+            .withColumn("distinct_events",
+                        F.coalesce("distinct_events", F.lit(0).cast("bigint")))
             .withColumn("duplicates",
                         F.col("total_events") - F.col("distinct_events")))
 

@@ -96,33 +96,6 @@ def token_stats(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def stopword_ratio_from_tokens(toks: Column) -> Column:
-    """Fraction of tokens that are function-word stopwords. Pass a
-    MATERIALIZED token-array column (see shingles_from_tokens note)."""
-    stops = F.filter(toks, lambda t: F.lower(t).isin(*STOPWORDS))
-    return F.size(stops) * 1.0 / F.greatest(F.size(toks), F.lit(1))
-
-
-def language_guess_from_tokens(toks: Column, threshold: float = 0.03) -> Column:
-    """n-gram-heuristic language ID: English function words make up a
-    few percent of natural English text; below threshold -> unknown.
-    (A production version adds per-language stopword tables — same plan
-    shape, one `when` branch per language.)"""
-    return F.when(stopword_ratio_from_tokens(toks) >= threshold,
-                  F.lit("en")).otherwise(F.lit("unknown"))
-
-
-def quality_score_from_tokens(toks: Column, n_chars: Column) -> Column:
-    """Document quality in [0,1]: length, vocabulary, and stopword
-    signals, equally deterministic in any engine (single-op arithmetic)."""
-    n_toks = F.size(toks)
-    len_component = F.least(n_chars / 500.0, F.lit(1.0))
-    vocab_component = F.least(F.size(F.array_distinct(toks)) * 1.0
-                              / F.greatest(n_toks, F.lit(1)) * 2.0, F.lit(1.0))
-    stop_component = F.least(stopword_ratio_from_tokens(toks) * 10.0, F.lit(1.0))
-    return (len_component * 0.4 + vocab_component * 0.3 + stop_component * 0.3)
-
-
 def fingerprint_exact(text: Column) -> Column:
     """Whole-document fingerprint: md5 of the raw text."""
     return F.md5(text)

@@ -395,16 +395,18 @@ _CT_T_PPB = 500_000_000
 
 
 def _contamination_oracle(n_cells: int, n_probe: int,
-                          threshold_ppb: int, dim: int) -> str:
+                          threshold_ppb: int, dim: int,
+                          split_sql: str | None = None) -> str:
     """Held-out anchors vs the TRAIN-split trained-IVF index: the
     shared chain runs over qc (train rows only); each eval row ranks
     the trained centroids by integer L2, probes n_probe cells, and
     its top-1 train neighbor by pinned 9dp cosine carries the
-    threshold flag."""
+    threshold flag. `split_sql` is the split expression over vec_id
+    (default: the registered query's curation.split_assign)."""
     from event_streaming_service_spark.operators.curation import (
         split_assign_sql,
     )
-    sp = split_assign_sql("vec_id")
+    sp = split_sql or split_assign_sql("vec_id")
     l2q = (f"CAST(list_sum(list_transform(range(1, {dim} + 1), i -> "
            f"CAST(qe.qv[i] - s.cv[i] AS BIGINT)"
            f" * (qe.qv[i] - s.cv[i]))) AS BIGINT)")

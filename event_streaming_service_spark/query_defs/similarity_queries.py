@@ -220,12 +220,15 @@ IVF_CELLS = 16
 IVF_PROBE = 4
 
 
-def _ivf_oracle() -> str:
+def _ivf_oracle(n_cells: int = IVF_CELLS, n_probe: int = IVF_PROBE,
+                k: int = K, dim: int = EMBEDDING_DIM,
+                n_query: int = N_QUERY_VECS) -> str:
     """IVF end to end in SQL: same seed cells (rank by vec_id), one
     Lloyd refinement (argmax assign on 9dp-rounded cosine, per-dim
     means rounded to 9dp), same probing and 6dp rerank. Possible
     because the operator pins every data-dependent float (see
-    similarity.ivf_cosine_topk docstring)."""
+    similarity.ivf_cosine_topk docstring). The defaults are the
+    registered query's; queries are the vectors with id < n_query."""
     cos = ("list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
            " * sqrt(list_dot_product({b}, {b})))")
     sim_vc = "ROUND(" + cos.format(a="v.vec", b="c.centroid") + ", 9)"
@@ -235,7 +238,7 @@ def _ivf_oracle() -> str:
     cents0 AS (
         SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS BIGINT)
                    AS cell, vec AS centroid
-        FROM v ORDER BY vec_id LIMIT {IVF_CELLS}),
+        FROM v ORDER BY vec_id LIMIT {n_cells}),
     assign0 AS (
         SELECT vec_id, cell, vec FROM (
             SELECT v.vec_id, c.cell, v.vec,
@@ -244,7 +247,7 @@ def _ivf_oracle() -> str:
             FROM v, cents0 c) WHERE rnk = 1),
     per_dim AS (
         SELECT cell, pos, ROUND(AVG(vec[pos]), 9) AS m
-        FROM assign0, range(1, {EMBEDDING_DIM + 1}) AS r(pos)
+        FROM assign0, range(1, {dim + 1}) AS r(pos)
         GROUP BY cell, pos),
     cents AS (
         SELECT cell, list(m ORDER BY pos) AS centroid
@@ -260,8 +263,8 @@ def _ivf_oracle() -> str:
             SELECT v.vec_id, c.cell,
                    ROW_NUMBER() OVER (PARTITION BY v.vec_id
                        ORDER BY {sim_vc} DESC, c.cell) AS rnk
-            FROM v, cents c WHERE v.vec_id < {N_QUERY_VECS})
-        WHERE rnk <= {IVF_PROBE}),
+            FROM v, cents c WHERE v.vec_id < {n_query})
+        WHERE rnk <= {n_probe}),
     cand AS (
         SELECT DISTINCT query_id, neighbor_id
         FROM q_cells JOIN c_cells USING (cell)
@@ -276,7 +279,7 @@ def _ivf_oracle() -> str:
         SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
                        ORDER BY cosine DESC, neighbor_id) AS INTEGER) AS rank
         FROM scored
-    ) WHERE rank <= {K}
+    ) WHERE rank <= {k}
     """
 
 
@@ -603,15 +606,17 @@ def q_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("x.cosine").alias("cosine")))
 
 
-@register(
-    "hard_negative_topk",
-    oracle=f"""
+def _hard_negative_oracle(query_mod: int = 125, k: int = K) -> str:
+    """hard_negative_topk in SQL: anchors are the ids divisible by
+    query_mod, neighbors of a different label ranked by 6dp cosine.
+    The defaults are the registered query's."""
+    return f"""
     WITH v AS (SELECT vec_id, label,
                       CAST(embedding AS DOUBLE[]) AS vec
                FROM embeddings),
     q AS (SELECT vec_id AS query_id, label AS query_label,
                  vec AS qv
-          FROM v WHERE vec_id % 125 = 0),
+          FROM v WHERE vec_id % {query_mod} = 0),
     scored AS (
         SELECT query_id, query_label, c.vec_id AS neighbor_id,
                c.label AS neighbor_label,
@@ -627,8 +632,13 @@ def q_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                        ORDER BY cosine DESC, neighbor_id)
                   AS INTEGER) AS rank
         FROM scored
-    ) WHERE rank <= 5
-    """,
+    ) WHERE rank <= {k}
+    """
+
+
+@register(
+    "hard_negative_topk",
+    oracle=_hard_negative_oracle(),
     tags=("similarity", "ann-baseline", "ml-eval", "embedding"),
 )
 def q_hard_negative_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

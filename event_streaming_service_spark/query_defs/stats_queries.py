@@ -179,9 +179,9 @@ def q_lag_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats.lag_surface(_lag(spark, sf_dir))
 
 
-@register(
-    "topic_dashboard",
-    oracle=_BASE + """
+# the dashboard's aggregate over events_coords, also run by its
+# NULL-id test against a hand-built events_coords
+TOPIC_DASHBOARD_SQL = """
     SELECT topic,
            COUNT(*) AS total_events,
            CAST(SUM(CASE WHEN event_type <> 'error' THEN 1 ELSE 0 END) AS BIGINT)
@@ -197,7 +197,12 @@ def q_lag_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(DISTINCT event_id) AS distinct_events,
            COUNT(*) - COUNT(DISTINCT event_id) AS duplicates
     FROM events_coords GROUP BY topic
-    """,
+    """
+
+
+@register(
+    "topic_dashboard",
+    oracle=_BASE + TOPIC_DASHBOARD_SQL,
     tags=("A4", "A5", "A7", "A10"),
 )
 def q_topic_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,15 +20,40 @@ from event_streaming_service_spark.sources.tables import TABLE_NAMES
 FLOAT_RTOL = 0.0  # exact: the driver hashes raw values
 
 
-def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
+def run_oracle(sql: str, sf_dir: str, tables=TABLE_NAMES) -> pd.DataFrame:
     con = duckdb.connect()
     try:
-        for t in TABLE_NAMES:
+        for t in tables:
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
         return con.execute(sql).df()
     finally:
         con.close()
+
+
+def write_embeddings(spark, sf_dir, rows, labels=None):
+    """Write (vec_id, vector) rows — plus an optional {vec_id: label}
+    map — as `<sf_dir>/embeddings.parquet` in the fixture schema, ONE
+    file so DuckDB reads it as a table, and return the engine's frame
+    over the same file. Pairs with `check_embeddings_oracle`."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from event_streaming_service_spark.sources.tables import load_table
+
+    cols = {"vec_id": pa.array([r[0] for r in rows], pa.int64()),
+            "embedding": pa.array([list(r[1]) for r in rows],
+                                  pa.list_(pa.float32()))}
+    if labels is not None:
+        cols["label"] = pa.array([labels[r[0]] for r in rows], pa.int32())
+    pq.write_table(pa.table(cols), f"{sf_dir}/embeddings.parquet")
+    return load_table(spark, str(sf_dir), "embeddings")
+
+
+def check_embeddings_oracle(spark_df, sql: str, sf_dir, name: str) -> None:
+    """`compare` against oracle SQL run over the file `write_embeddings`
+    wrote."""
+    compare(spark_df, run_oracle(sql, str(sf_dir), ("embeddings",)), name)
 
 
 def canonicalize(df: pd.DataFrame) -> pd.DataFrame:

@@ -876,3 +876,45 @@ def test_segmented_paths_respect_sub_millisecond_order(spark):
                                         order_tiebreak="event_id",
                                         n_segments=4).collect()}
     assert plain_t == seg_t == {("a", "b"): 1, ("b", "c"): 1}
+
+
+def test_topic_dashboard_null_ids_match_oracle(spark):
+    """COUNT(DISTINCT event_id) skips NULL ids: t1's ids {1, 1, NULL, 2}
+    give distinct 2 and duplicates 2; t2's ids are all NULL (distinct
+    0, duplicates 2, the topic still reported); a NULL topic is one
+    group of its own. Checked against the dashboard's oracle SQL over
+    the same rows."""
+    import datetime as dt
+
+    import duckdb
+    import pandas as pd
+
+    from event_streaming_service_spark.operators import stats
+    from event_streaming_service_spark.query_defs.stats_queries import (
+        TOPIC_DASHBOARD_SQL)
+    from tests.parity import compare
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [("t1", 1, "ok", 10.0), ("t1", 1, "ok", 20.0),
+            ("t1", None, "error", 30.0), ("t1", 2, "ok", 40.0),
+            ("t2", None, "ok", 5.0), ("t2", None, "error", 7.0),
+            (None, 3, "ok", 1.0), (None, 3, "ok", 2.0)]
+    rows = [(tp, eid, et, v, t0 + dt.timedelta(minutes=i))
+            for i, (tp, eid, et, v) in enumerate(rows)]
+    cols = ["topic", "event_id", "event_type", "value", "ts"]
+    ec = spark.createDataFrame(
+        rows, "topic string, event_id bigint, event_type string,"
+              " value double, ts timestamp")
+    out = stats.topic_dashboard(ec)
+    got = {r["topic"]: (r["distinct_events"], r["duplicates"])
+           for r in out.collect()}
+    assert got == {"t1": (2, 2), "t2": (0, 2), None: (1, 1)}
+
+    pdf = pd.DataFrame(rows, columns=cols).astype({"event_id": "Int64"})
+    con = duckdb.connect()
+    try:
+        con.register("events_coords", pdf)
+        want = con.execute(TOPIC_DASHBOARD_SQL).df()
+    finally:
+        con.close()
+    compare(out, want, "topic_dashboard")

@@ -160,29 +160,53 @@ def test_train_codebook_floor_division_matches_oracle_on_negatives(spark):
     assert trained == expect
 
 
-def test_pq_arrow_and_jvm_paths_bit_identical(spark):
-    """Round 10 made the Arrow kernels the DEFAULT execution path of
-    the registered PQ queries; this pins that both paths stay
-    bit-identical at unit scale (the scale probe asserts it at 2M)."""
-    emb = _emb(spark, n=50, dim=16, seed=23)
-    kw = dict(k=7, m_sub=4, n_codes=8, query_mod=17)
-    a = sorted(tuple(r) for r in
-               pq.pq_topk(emb, use_arrow=True, **kw).collect())
-    b = sorted(tuple(r) for r in
-               pq.pq_topk(emb, use_arrow=False, **kw).collect())
-    assert a and a == b
+def _emb_rows(n, dim, seed):
+    rng = random.Random(seed)
+    return [(i, [rng.uniform(-1, 1) for _ in range(dim)])
+            for i in range(n)]
 
 
-def test_ivf_arrow_and_jvm_paths_bit_identical(spark):
+def test_pq_topk_matches_oracle(spark, tmp_path):
+    """pq_topk against pq_cosine_topk's own oracle SQL at this
+    fixture's shape (4 subspaces of 4 dims, 8 codes, 3 queries)."""
+    from event_streaming_service_spark.query_defs.pq_queries import (
+        _pq_oracle)
+    from tests.parity import check_embeddings_oracle, write_embeddings
+
+    emb = write_embeddings(spark, tmp_path, _emb_rows(50, 16, 23))
+    out = pq.pq_topk(emb, k=7, m_sub=4, n_codes=8, query_mod=17)
+    assert out.count() == 3 * 7
+    check_embeddings_oracle(
+        out, _pq_oracle(k=7, m_sub=4, d_sub=4, n_codes=8, query_mod=17),
+        tmp_path, "pq_topk")
+
+
+def test_ivf_cosine_topk_matches_oracle(spark, tmp_path):
+    """ivf_cosine_topk (one Lloyd round, 8 cells, 3 probes) against
+    ivf_cosine_topk's own oracle SQL at this fixture's shape."""
     from event_streaming_service_spark.operators import similarity
+    from event_streaming_service_spark.query_defs.similarity_queries import (
+        _ivf_oracle)
+    from tests.parity import check_embeddings_oracle, write_embeddings
 
-    emb = _emb(spark, n=60, dim=16, seed=29)
-    qs = emb.filter("vec_id < 6")
-    kw = dict(n_cells=8, n_probe=3)
-    a = sorted(tuple(r) for r in
-               similarity.ivf_cosine_topk(qs, emb, 5, use_arrow=True,
-                                          **kw).collect())
-    b = sorted(tuple(r) for r in
-               similarity.ivf_cosine_topk(qs, emb, 5, use_arrow=False,
-                                          **kw).collect())
-    assert a and a == b
+    emb = write_embeddings(spark, tmp_path, _emb_rows(60, 16, 29))
+    out = similarity.ivf_cosine_topk(emb.filter("vec_id < 6"), emb, 5,
+                                     n_cells=8, n_probe=3)
+    assert out.count() > 0
+    check_embeddings_oracle(
+        out, _ivf_oracle(n_cells=8, n_probe=3, k=5, dim=16, n_query=6),
+        tmp_path, "ivf_cosine_topk")
+
+
+def test_pq_topk_rejects_codebook_of_wrong_width(spark):
+    """One entry per code, all one width, but not the corpus dim: the
+    count and equal-width checks pass, so the width check must fail
+    the query with a "codebook width" error instead of scoring
+    truncated codes."""
+    import pytest
+
+    emb = _emb(spark, n=40, dim=16, seed=31)
+    bad = [[0] * 12 for _ in range(8)]
+    with pytest.raises(Exception, match="codebook width"):
+        pq.pq_topk(emb, k=5, m_sub=4, n_codes=8, query_mod=13,
+                   codebook=bad).collect()

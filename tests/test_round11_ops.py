@@ -3,6 +3,7 @@ train->apply cell scoring, paragraph-grain exact dedup."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from event_streaming_service_spark.operators import dedup, kmeans
@@ -72,25 +73,26 @@ def test_semdedup_finds_planted_duplicate(spark):
     assert r["cosine_9dp"] == 1.0
 
 
-def test_semdedup_arrow_jvm_parity(spark):
-    """The BLAS Gram kernel (registered path) and the self-join
-    expression twin must emit the SAME pair set with bit-equal pinned
-    cosines — on a low-threshold fixture where every within-cluster
-    pair survives, so the comparison covers the full pair grid."""
+def test_semdedup_pairs_matches_oracle(spark, tmp_path):
+    """The Gram kernel against semdedup_pairs' own oracle SQL on a
+    low-threshold fixture where every within-cluster pair survives,
+    so the comparison covers the full pair grid."""
     import random
+
+    from event_streaming_service_spark.query_defs.kmeans_queries import (
+        _semdedup_oracle)
+    from tests.parity import check_embeddings_oracle, write_embeddings
 
     rng = random.Random(7)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(8)])
             for i in range(60)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    kw = dict(n_clusters=4, rounds=1, threshold_ppb=-2_000_000_000)
-    a = {(r["cluster_id"], r["vec_a"], r["vec_b"]): r["cosine_9dp"]
-         for r in kmeans.semdedup_pairs(emb, use_arrow=True,
-                                        **kw).collect()}
-    j = {(r["cluster_id"], r["vec_a"], r["vec_b"]): r["cosine_9dp"]
-         for r in kmeans.semdedup_pairs(emb, use_arrow=False,
-                                        **kw).collect()}
-    assert a == j and len(a) > 100
+    emb = write_embeddings(spark, tmp_path, rows)
+    out = kmeans.semdedup_pairs(emb, n_clusters=4, rounds=1,
+                                threshold_ppb=-2_000_000_000)
+    assert out.count() > 100
+    check_embeddings_oracle(
+        out, _semdedup_oracle(4, 1, 8, -2_000_000_000), tmp_path,
+        "semdedup_pairs")
 
 
 def test_ivf_trained_probes_right_cells(spark):
@@ -256,57 +258,94 @@ def test_logreg2_cell_scores_balanced_grid(spark):
         assert r["obs_p_nano"] == 500_000_000
 
 
-def test_hard_negative_arrow_jvm_parity(spark):
-    """The broadcast-anchor BLAS kernel (registered path, VERDICT r11
-    item #5) and the crossJoin expression twin must emit identical
-    (anchor, neighbor, labels, cosine, rank) rows — the in-kernel
-    label filter must not change recall, and the 6dp pin must agree
-    bit-for-bit."""
+# u . v = 8 and |u|^2 = |v|^2 = 1024, so cos(u, v) = 1/128 exactly and
+# cosine * 1e6 = 7812.5: 6 dp half away from zero (DuckDB ROUND) gives
+# 0.007813, half to even would give 0.007812.
+_U = [31.0, 7.0, 3.0, 2.0, 1.0]
+_V = [-7.0, 25.0, 5.0, 10.0, 15.0]
+
+
+def test_hard_negative_topk_matches_oracle(spark, tmp_path):
+    """The broadcast-anchor kernel against hard_negative_topk's own
+    oracle SQL: a random fixture (the in-kernel label filter must not
+    change recall) and the u/v pair whose cosine sits on a 6 dp
+    half-microunit boundary."""
     import random
 
     from event_streaming_service_spark.operators import similarity
+    from event_streaming_service_spark.query_defs.similarity_queries import (
+        _hard_negative_oracle)
+    from tests.parity import check_embeddings_oracle, write_embeddings
 
     rng = random.Random(11)
-    rows = [(i, i % 3, [rng.uniform(-1, 1) for _ in range(8)])
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)])
             for i in range(60)]
-    emb = spark.createDataFrame(
-        rows, "vec_id long, label int, embedding array<float>")
-    kw = dict(k=3, query_mod=10)
-    key = ("query_id", "query_label", "neighbor_id",
-           "neighbor_label", "cosine", "rank")
-    a = sorted(tuple(r[c] for c in key) for r in
-               similarity.hard_negative_topk(
-                   emb, use_arrow=True, **kw).collect())
-    j = sorted(tuple(r[c] for c in key) for r in
-               similarity.hard_negative_topk(
-                   emb, use_arrow=False, **kw).collect())
-    assert a == j and len(a) == 6 * 3
+    emb = write_embeddings(spark, tmp_path, rows,
+                           {i: i % 3 for i in range(60)})
+    out = similarity.hard_negative_topk(emb, k=3, query_mod=10)
+    assert out.count() == 6 * 3
+    check_embeddings_oracle(out, _hard_negative_oracle(10, 3), tmp_path,
+                            "hard_negative_topk")
+
+    # anchors 0 (u) and 10 (v), each the other's only negative
+    pair_dir = tmp_path / "uv"
+    pair_dir.mkdir()
+    emb = write_embeddings(spark, pair_dir, [(0, _U), (10, _V)],
+                           {0: 0, 10: 1})
+    out = similarity.hard_negative_topk(emb, k=3, query_mod=10)
+    assert [r["cosine"] for r in out.collect()] == [0.007813, 0.007813]
+    check_embeddings_oracle(out, _hard_negative_oracle(10, 3), pair_dir,
+                            "hard_negative_topk")
 
 
-def test_semdedup_rounding_boundary_parity(spark):
-    """ADVICE r11: the Arrow kernel pins with
-    sign(C)*floor(abs(C)*1e9+0.5)/1e9 in binary doubles while the JVM
-    twin uses ROUND(x, 9) HALF_UP — values landing EXACTLY on a .5
-    boundary are where they could diverge. Constructed SQ8 vectors
-    u=[31,7,3,2,1], v=[-7,31,2,-3,1]: daa=dbb=1024 (dyadic perfect
-    square, so sqrt and the quotient are exact in doubles), dab=1,
-    cosine = 1/1024 -> cosine*1e9 = 976562.5 EXACTLY. Both paths must
-    round it up (away from zero) to 0.000976563 and agree on every
-    pair. Envelope rows 0/254 pin the per-dim quantizer so each
-    integer vector is q = value - 127 exactly."""
+@pytest.mark.parametrize("max_broadcast_rows", [1, None],
+                         ids=["tiled", "broadcast"])
+def test_cosine_kernels_round_half_up(spark, max_broadcast_rows):
+    """The u/v pair on both cosine_topk paths and both
+    cosine_near_dup_pairs paths: 6 dp half away from zero, as the
+    oracles' DuckDB ROUND."""
+    from event_streaming_service_spark.operators import similarity
+
+    emb = spark.createDataFrame([(0, _U), (1, _V)],
+                                "vec_id long, embedding array<float>")
+    kw = ({} if max_broadcast_rows is None
+          else {"max_broadcast_rows": max_broadcast_rows})
+    top = sorted(tuple(r) for r in
+                 similarity.cosine_topk(emb, emb, 1, **kw).collect())
+    assert top == [(0, 1, 0.007813, 1), (1, 0, 0.007813, 1)]
+    pairs = [tuple(r) for r in similarity.cosine_near_dup_pairs(
+        emb, 0.007813, **kw).collect()]
+    assert pairs == [(0, 1, 0.007813)]
+
+
+def test_semdedup_rounding_boundary_parity(spark, tmp_path):
+    """The Gram kernel pins with sign(C)*floor(abs(C)*1e9+0.5)/1e9 in
+    binary doubles while the oracle uses DuckDB ROUND(x, 9) — values
+    landing EXACTLY on a .5 boundary are where they could diverge.
+    Constructed SQ8 vectors u=[31,7,3,2,1], v=[-7,31,2,-3,1]:
+    daa=dbb=1024 (dyadic perfect square, so sqrt and the quotient are
+    exact in doubles), dab=1, cosine = 1/1024 -> cosine*1e9 =
+    976562.5 EXACTLY. Both engines must round it up (away from zero)
+    to 0.000976563 and agree on every pair. Envelope rows 0/254 pin
+    the per-dim quantizer so each integer vector is q = value - 127
+    exactly."""
+    from event_streaming_service_spark.query_defs.kmeans_queries import (
+        _semdedup_oracle)
+    from tests.parity import check_embeddings_oracle, write_embeddings
+
     rows = [
         (0, [0.0] * 5),                              # qv = [-127]*5
         (1, [254.0] * 5),                            # qv = [+127]*5
         (2, [158.0, 134.0, 130.0, 129.0, 128.0]),    # qv = u
         (3, [120.0, 158.0, 129.0, 124.0, 128.0]),    # qv = v
     ]
-    emb = spark.createDataFrame(rows,
-                                "vec_id long, embedding array<float>")
-    kw = dict(n_clusters=1, rounds=1, threshold_ppb=-2_000_000_000)
-    a = {(r["vec_a"], r["vec_b"]): r["cosine_9dp"] for r in
-         kmeans.semdedup_pairs(emb, use_arrow=True, **kw).collect()}
-    j = {(r["vec_a"], r["vec_b"]): r["cosine_9dp"] for r in
-         kmeans.semdedup_pairs(emb, use_arrow=False, **kw).collect()}
-    assert a == j and len(a) == 6
+    emb = write_embeddings(spark, tmp_path, rows)
+    out = kmeans.semdedup_pairs(emb, n_clusters=1, rounds=1,
+                                threshold_ppb=-2_000_000_000)
+    a = {(r["vec_a"], r["vec_b"]): r["cosine_9dp"] for r in out.collect()}
+    assert len(a) == 6
     assert a[(2, 3)] == 0.000976563      # the .5 boundary, rounded up
     assert a[(0, 1)] == -1.0
+    check_embeddings_oracle(
+        out, _semdedup_oracle(1, 1, 5, -2_000_000_000), tmp_path,
+        "semdedup_pairs")

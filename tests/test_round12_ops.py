@@ -100,28 +100,31 @@ def test_semdedup_survivors_invariants(spark):
         assert (grp["best_vec_id"] == win["vec_id"]).all()
 
 
-def test_contamination_arrow_jvm_parity(spark):
-    """The per-cell BLAS cogroup kernel (registered path) and the
-    expression twin must emit identical top-1 rows — same neighbor,
-    bit-equal pinned cosine, same flag — on a random fixture where
-    every anchor probes multiple non-trivial cells."""
+def test_contamination_matches_oracle(spark, tmp_path):
+    """The per-cell BLAS cogroup kernel against
+    embedding_split_contamination's own oracle SQL (with this
+    fixture's split) on a random fixture where every anchor probes
+    multiple non-trivial cells: same neighbor, bit-equal pinned
+    cosine, same flag."""
     import random
+
+    from event_streaming_service_spark.query_defs.kmeans_queries import (
+        _contamination_oracle)
+    from tests.parity import check_embeddings_oracle, write_embeddings
 
     rng = random.Random(13)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(8)])
             for i in range(80)]
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>")
+    emb = write_embeddings(spark, tmp_path, rows)
     split = F.when(F.col("vec_id") % 7 == 0, F.lit("test")) \
              .otherwise(F.lit("train"))
-    kw = dict(n_cells=4, n_probe=3, rounds=1,
-              threshold_ppb=500_000_000)
-    key = ("query_id", "query_split", "neighbor_id", "cosine_9dp",
-           "contaminated")
-    a = sorted(tuple(r[c] for c in key)
-               for r in kmeans.ivf_split_contamination(
-                   emb, split, use_arrow=True, **kw).collect())
-    j = sorted(tuple(r[c] for c in key)
-               for r in kmeans.ivf_split_contamination(
-                   emb, split, use_arrow=False, **kw).collect())
-    assert a == j and len(a) == 12
+    out = kmeans.ivf_split_contamination(
+        emb, split, n_cells=4, n_probe=3, rounds=1,
+        threshold_ppb=500_000_000)
+    assert out.count() == 12
+    check_embeddings_oracle(
+        out, _contamination_oracle(
+            4, 3, 500_000_000, 8,
+            split_sql="CASE WHEN vec_id % 7 = 0 THEN 'test'"
+                      " ELSE 'train' END"),
+        tmp_path, "embedding_split_contamination")

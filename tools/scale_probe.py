@@ -7,11 +7,8 @@ already show at 10^7 rows on 32 cores — quadratic fan-out, per-row
 Python, driver collects, unbounded iterative lineage.
 
 Usage: python tools/scale_probe.py [probe ...]
-Probes: components packing quota simhash window ewma gapfill
-        heavy_hitters skyline profile setjoin diff attribution
-        transition hierarchy pq_codes ivfpq semantic_dedup
-        triangles winnow distinct_sketch adamic_adar kcore
-        global_rank cdc_merge
+Every `probe_<name>` function below is the probe `<name>`; no
+argument runs them all in definition order.
 """
 
 from __future__ import annotations
@@ -482,18 +479,12 @@ def probe_hierarchy(spark):
 
 def probe_pq_codes(spark):
     """2M synthetic 64-dim int8 vectors through PQ code assignment
-    (16 codes x 8 subspaces), BOTH paths: the Arrow/numpy kernel (the
-    corpus-scale hot path — one (n,m,k) tensor argmin per batch) and,
-    on a 100k slice, the JVM expression path the oracle query plans
-    gate. Asserts the two produce BIT-IDENTICAL code arrays on the
-    slice (the cross-engine exactness contract), plus range and
-    self-coding invariants. Expression-side rate measured ~21k
-    vec/s/core (interpreted higher-order lambdas — why the Arrow
-    kernel exists); the kernel must be >10x faster."""
-    from event_streaming_service_spark.operators.pq import (
-        _codebook_literal, _codes_expr, pq_codes_arrow)
+    (16 codes x 8 subspaces) — the Arrow/numpy kernel, one (n,m,k)
+    tensor argmin per batch. Asserts every code is in range and the
+    self-coding invariant on the seeds. The interpreted-lambda
+    expression form this kernel replaced ran ~21k vec/s/core."""
+    from event_streaming_service_spark.operators.pq import pq_codes_arrow
     dim, m_sub, n_codes = 64, 8, 16
-    d_sub = dim // m_sub
     vecs = spark.range(0, 2_000_000).select(
         F.col("id").alias("vec_id"),
         F.transform(F.sequence(F.lit(1), F.lit(dim)),
@@ -501,7 +492,6 @@ def probe_pq_codes(spark):
                                - 127).cast("int")).alias("qv"))
     seeds = [list(r["qv"]) for r in
              vecs.orderBy("vec_id").limit(n_codes).collect()]
-    cent = _codebook_literal(seeds, m_sub, d_sub)
 
     t0 = time.perf_counter()
     coded = pq_codes_arrow(vecs, seeds, m_sub)
@@ -513,26 +503,20 @@ def probe_pq_codes(spark):
     sec = time.perf_counter() - t0
     assert agg["n"] == 2_000_000 and agg["bad"] == 0
 
-    slice_ = vecs.where(F.col("vec_id") < 100_000)
-    expr_codes = {r["vec_id"]: list(r["codes"]) for r in
-                  slice_.select("vec_id",
-                                _codes_expr(cent, m_sub, d_sub, n_codes)
-                                .alias("codes")).collect()}
-    arrow_codes = {r["vec_id"]: list(r["codes"]) for r in
-                   pq_codes_arrow(slice_, seeds, m_sub).collect()}
-    assert expr_codes == arrow_codes, "Arrow/JVM code paths diverge"
+    seed_codes = {r["vec_id"]: list(r["codes"]) for r in
+                  pq_codes_arrow(vecs.where(F.col("vec_id") < n_codes),
+                                 seeds, m_sub).collect()}
     for vid in range(n_codes):
         # seed vid's distance to centroid vid is 0 in every subspace;
         # tiebreak can only pick an EARLIER seed with identical subvec
-        assert all(c <= vid for c in arrow_codes[vid]), vid
-    return sec, "vecs=2M arrow kernel; 100k slice == JVM expr path"
+        assert all(c <= vid for c in seed_codes[vid]), vid
+    return sec, "vecs=2M arrow kernel; codes in range, seeds self-code"
 
 
 def probe_ivfpq(spark):
     """10M synthetic 64-dim vectors through the FULL IVF+PQ
     composition (ivf_pq_topk: 16 cells, 4 probes, 8x16 PQ-ADC
-    rerank) — the r5 gap: the two stages were probed separately but
-    never end-to-end at 10^7. Asserts (a) output arity (k rows per
+    rerank) end to end at 10^7. Asserts (a) output arity (k rows per
     query, ranks 1..k, no self-matches) and (b) THE PRUNING CONTRACT:
     every returned neighbor's cell — recomputed independently in
     numpy from the collected centroids on just the returned ids — is
@@ -542,8 +526,7 @@ def probe_ivfpq(spark):
     (and a very different wall time)."""
     import numpy as np
 
-    from event_streaming_service_spark.operators.pq import (
-        ivf_pq_topk, ivf_pq_topk_arrow)
+    from event_streaming_service_spark.operators.pq import ivf_pq_topk
 
     dim, n_cells, n_probe, k = 64, 16, 4, 10
     n = 10_000_000
@@ -555,9 +538,8 @@ def probe_ivfpq(spark):
         .alias("embedding"))
     query_mod = 1_000_000  # 10 queries
     t0 = time.perf_counter()
-    out = ivf_pq_topk_arrow(vecs, k=k, n_cells=n_cells,
-                            n_probe=n_probe, m_sub=8, n_codes=16,
-                            query_mod=query_mod)
+    out = ivf_pq_topk(vecs, k=k, n_cells=n_cells, n_probe=n_probe,
+                      m_sub=8, n_codes=16, query_mod=query_mod)
     rows = out.collect()
     sec = time.perf_counter() - t0
 
@@ -592,40 +574,25 @@ def probe_ivfpq(spark):
             f"query {r['query_id']}'s probed cells — ADC scored an "
             f"unpruned candidate")
 
-    # Arrow-vs-JVM parity on a 200k slice: BLAS cells + tensor codes
-    # + LUT ADC must reproduce the expression path's output exactly
-    # (integer ADC is bit-identical by construction; the 9 dp cosine
-    # rounding absorbs BLAS fold-order ulps)
-    slice_ = vecs.where(F.col("vec_id") < 200_000)
-    a = {(r["query_id"], r["neighbor_id"], r["adc_score"], r["rank"])
-         for r in ivf_pq_topk_arrow(slice_, k=k, n_cells=n_cells,
-                                    n_probe=n_probe, m_sub=8,
-                                    n_codes=16,
-                                    query_mod=50_000).collect()}
-    j = {(r["query_id"], r["neighbor_id"], r["adc_score"], r["rank"])
-         for r in ivf_pq_topk(slice_, k=k, n_cells=n_cells,
-                              n_probe=n_probe, m_sub=8, n_codes=16,
-                              query_mod=50_000).collect()}
-    assert a == j, "Arrow/JVM IVF+PQ paths diverge"
     return sec, (f"vecs=10M queries={len(by_q)} pruning contract held "
-                 f"(arrow path; 589 s JVM-expr baseline); "
-                 f"200k slice == JVM path")
+                 f"(589 s JVM-expr baseline)")
 
 
 def probe_semantic_dedup(spark):
     """1M 64-dim embeddings = 100k planted groups of 10 EXACT
     duplicates through the full semantic-dedup pipeline (LSH buckets
-    -> exact cosine >= 0.99 -> connected components -> canonical
-    assignment). Asserted-exact output: exactly 100k clusters, every
-    one of size 10 with cluster_id = its smallest member id (planted
-    ids are contiguous per group; a cross-group merge needs cosine
-    >= 0.99 between independent 64-dim hash vectors — ~8 sigma, so
-    an assertion failure means a pipeline bug, not bad luck)."""
+    -> bucket self-join with exact cosine >= 0.99 -> connected
+    components -> canonical assignment). Asserted-exact output:
+    exactly 100k clusters, every one of size 10 with cluster_id = its
+    smallest member id (planted ids are contiguous per group; a
+    cross-group merge needs cosine >= 0.99 between independent 64-dim
+    hash vectors — ~8 sigma, so an assertion failure means a pipeline
+    bug, not bad luck)."""
     from event_streaming_service_spark.operators.similarity import (
         semantic_dedup_clusters)
 
-    dim = 64
-    vecs = spark.range(0, 1_000_000).select(
+    dim, n_groups = 64, 100_000
+    vecs = spark.range(0, 10 * n_groups).select(
         F.col("id").alias("vec_id"),
         F.transform(
             F.sequence(F.lit(1), F.lit(dim)),
@@ -635,7 +602,7 @@ def probe_semantic_dedup(spark):
             .cast("float")).alias("embedding"))
     t0 = time.perf_counter()
     out = semantic_dedup_clusters(vecs, threshold=0.99, dim=dim,
-                                  n_planes=16, use_arrow=True)
+                                  n_planes=16)
     agg = (out.groupBy("cluster_id")
            .agg(F.count(F.lit(1)).alias("sz"),
                 F.min("vec_id").alias("mn"),
@@ -646,23 +613,9 @@ def probe_semantic_dedup(spark):
                              & (F.col("nc") == 1), 0).otherwise(1))
                 .alias("bad")).first())
     sec = time.perf_counter() - t0
-    assert agg["n_clusters"] == 100_000 and agg["bad"] == 0, (
+    assert agg["n_clusters"] == n_groups and agg["bad"] == 0, (
         agg["n_clusters"], agg["bad"])
-
-    # Arrow-vs-JVM parity on a 50k slice: the gram-matrix pair path
-    # and the bucket self-join's aggregate-zip cosine must produce
-    # the IDENTICAL cluster assignment (6 dp rounding absorbs BLAS
-    # fold-order ulps; the oracle-gated query stays on the JVM path)
-    slice_ = vecs.where(F.col("vec_id") < 50_000)
-    a = {(r["vec_id"], r["cluster_id"], r["cluster_size"])
-         for r in semantic_dedup_clusters(
-             slice_, 0.99, dim, n_planes=16, use_arrow=True).collect()}
-    j = {(r["vec_id"], r["cluster_id"], r["cluster_size"])
-         for r in semantic_dedup_clusters(
-             slice_, 0.99, dim, n_planes=16, use_arrow=False).collect()}
-    assert a == j, "Arrow/JVM semantic-dedup paths diverge"
-    return sec, ("vecs=1M clusters=100k all size-10 (arrow path); "
-                 "50k slice == JVM path")
+    return sec, (f"vecs={10 * n_groups} clusters={n_groups} all size-10")
 
 
 def probe_triangles(spark):
@@ -1358,14 +1311,9 @@ def probe_kmeans(spark):
     is the exact floor-mean 0 and stays there; assignment never
     crosses blobs (cross-blob dim-1 gap adds to the shared dim-2
     term). Closed form: every cluster has exactly 250k members,
-    share 125000 ppm, point inertia exactly 127^2 = 16129.
-
-    Also asserts Arrow-vs-JVM assignment parity on a 100k slice: the
-    tensor kernel (emit_dist) and the expression twin must agree
-    bit-for-bit on (cluster_id, point_inertia) before the Arrow path
-    is trusted as the registered default."""
+    share 125000 ppm, point inertia exactly 127^2 = 16129."""
     from event_streaming_service_spark.operators.kmeans import (
-        kmeans_assign, kmeans_cluster_report)
+        kmeans_cluster_report)
 
     n, d = 2_000_000, 32
     vec = F.transform(
@@ -1377,14 +1325,6 @@ def probe_kmeans(spark):
     emb = spark.range(n).select(F.col("id").alias("vec_id"),
                                 vec.alias("embedding"))
 
-    # parity gate first (bounded slice, both paths)
-    small = emb.where(F.col("vec_id") < 100_000)
-    a = {r["vec_id"]: (r["cluster_id"], r["point_inertia"])
-         for r in kmeans_assign(small, 8, 2, use_arrow=True).collect()}
-    j = {r["vec_id"]: (r["cluster_id"], r["point_inertia"])
-         for r in kmeans_assign(small, 8, 2, use_arrow=False).collect()}
-    assert a == j, "Arrow/JVM assignment parity broken"
-
     t0 = time.perf_counter()
     rep = kmeans_cluster_report(emb, n_clusters=8, rounds=2).collect()
     sec = time.perf_counter() - t0
@@ -1395,8 +1335,7 @@ def probe_kmeans(spark):
         assert r["mean_point_inertia"] == 127 * 127, r
         assert r["inertia"] == (n // 8) * 127 * 127, r
     return sec, (f"vecs={n} d={d}; 2 Lloyd rounds; 8 planted blobs "
-                 f"recovered exactly (balance + inertia closed form); "
-                 f"Arrow/JVM parity on 100k")
+                 f"recovered exactly (balance + inertia closed form)")
 
 
 def probe_contamination(spark):
@@ -1447,50 +1386,8 @@ def probe_contamination(spark):
                  f"1.0, clean anchors <= 0; index train-split-only")
 
 
-PROBES = {
-    "kmeans": probe_kmeans,
-    "contamination": probe_contamination,
-    "logistic_newton": probe_logistic_newton,
-    "pca_power": probe_pca_power,
-    "components": probe_components,
-    "heavy_hitters": probe_heavy_hitters,
-    "packing": probe_packing,
-    "quota": probe_quota,
-    "simhash": probe_simhash,
-    "window": probe_window,
-    "skyline": probe_skyline,
-    "profile": probe_profile,
-    "setjoin": probe_setjoin,
-    "ewma": probe_ewma,
-    "gapfill": probe_gapfill,
-    "diff": probe_diff,
-    "hierarchy": probe_hierarchy,
-    "pq_codes": probe_pq_codes,
-    "attribution": probe_attribution,
-    "transition": probe_transition,
-    "ivfpq": probe_ivfpq,
-    "semantic_dedup": probe_semantic_dedup,
-    "triangles": probe_triangles,
-    "winnow": probe_winnow,
-    "distinct_sketch": probe_distinct_sketch,
-    "adamic_adar": probe_adamic_adar,
-    "adamic_hub": probe_adamic_hub,
-    "assoc_rules": probe_assoc_rules,
-    "lrs": probe_lrs,
-    "gram": probe_gram,
-    "intervals": probe_intervals,
-    "blocklist": probe_blocklist,
-    "kcore": probe_kcore,
-    "global_rank": probe_global_rank,
-    "cdc_merge": probe_cdc_merge,
-    "bootstrap": probe_bootstrap,
-    "theil_sen": probe_theil_sen,
-    "containment": probe_containment,
-    "ks_drift": probe_ks_drift,
-    "lpa_star": probe_lpa_star,
-    "hits_bipartite": probe_hits_bipartite,
-    "spearman": probe_spearman,
-}
+PROBES = {name[len("probe_"):]: fn for name, fn in globals().items()
+          if name.startswith("probe_")}
 
 
 def main() -> None:
