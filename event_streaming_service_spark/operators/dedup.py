@@ -638,7 +638,7 @@ _EVAL_LITERAL_MAX = 20_000
 
 def contamination_flags(corpus: DataFrame, eval_docs: DataFrame,
                         id_col: str = "doc_id", text_col: str = "text",
-                        n: int = 3, hash_probe: bool = True) -> DataFrame:
+                        n: int = 3) -> DataFrame:
     """Benchmark decontamination: flag corpus documents sharing any
     word n-gram with an evaluation set (the train/test-overlap check
     every serious LLM data pipeline runs before training — n-gram
@@ -670,55 +670,42 @@ def contamination_flags(corpus: DataFrame, eval_docs: DataFrame,
                     F.col("__toks"), n).alias("__sh"))
                 .agg(F.array_distinct(
                     F.flatten(F.collect_list("__sh"))).alias("__g")))
-    # one driver job yields BOTH the gram strings (path choice + the
-    # portable string probe) and their xxhash64 values (the int probe)
+    # one driver job yields the distinct grams' xxhash64 values: their
+    # count picks the path, their set is the probe literal
     row = (eval_arr
-           .select("__g", F.transform(
+           .select(F.transform(
                "__g", lambda g: F.xxhash64(g)).alias("__h"))
            .first())
-    grams = sorted(row["__g"]) if row and row["__g"] else []
+    hashes = row["__h"] if row and row["__h"] else []
     toks = corpus.select(
         F.col(id_col).alias("doc_id"),
         tokens(F.col(text_col)).alias("__toks"))
-    if len(grams) <= _EVAL_LITERAL_MAX:
-        if hash_probe:
-            # int64 probe (VERDICT r7 item #4): ArrayIntersect rebuilds
-            # its lookup set from the literal operand for EVERY row
-            # (~80 us at 1,330 strings, 2.4x the whole intersect cost);
-            # xxhash64-ing both sides makes that rebuild a long-keyed
-            # set and every probe an integer equality (measured 0.36s
-            # -> 0.15s intersect delta at sf0.1). The hashes ride the
-            # SAME eval job as the grams, so this path adds zero jobs;
-            # both sides use the identical JVM hash. Distinct-gram
-            # counts survive hashing barring a 64-bit corpus-vs-eval
-            # collision (P < n_corpus_grams * n_eval_grams / 2^64,
-            # ~1e-10 at sf0.1); the SQL oracle stays on the portable
-            # string path and the driver compare would surface one.
-            hlit = sorted(set(row["__h"])) if row and row["__h"] else []
-            # one SQL-parsed literal, NOT F.lit(list): the py4j
-            # element-by-element conversion costs ~0.5 us-free ms per
-            # element (~0.6s at 1,330 — measured), the parser ~3 ms
-            lith = F.expr(
-                "array(" + ",".join(f"{h}L" for h in hlit) + ")"
-            ) if hlit else F.lit([]).cast("array<bigint>")
-            doc_h = F.transform(
-                shingles_from_tokens(F.col("__toks"), n),
-                lambda s: F.xxhash64(s))
-            return (toks.select(
-                        "doc_id",
-                        F.size(F.array_intersect(lith, doc_h))
-                        .cast("bigint").alias("n_contaminated_ngrams"))
-                    .withColumn("contaminated",
-                                F.col("n_contaminated_ngrams") > 0))
-        lit = F.lit(grams).cast("array<string>")
-        # literal side FIRST: ArrayIntersect keys its per-row lookup
-        # off one operand; the (lit, doc) order measured ~15% faster
-        # than (doc, lit) at sf0.1 (the per-row rebuild of the lookup
-        # is engine-fixed either way)
+    if len(hashes) <= _EVAL_LITERAL_MAX:
+        # int64 probe: ArrayIntersect rebuilds
+        # its lookup set from the literal operand for EVERY row
+        # (~80 us at 1,330 strings, 2.4x the whole intersect cost);
+        # xxhash64-ing both sides makes that rebuild a long-keyed
+        # set and every probe an integer equality (measured 0.36s
+        # -> 0.15s intersect delta at sf0.1). The hashes ride the
+        # SAME eval job as the path choice, so this path adds zero
+        # jobs; both sides use the identical JVM hash. Distinct-gram
+        # counts survive hashing barring a 64-bit corpus-vs-eval
+        # collision (P < corpus grams * eval grams / 2^64,
+        # ~1e-10 at sf0.1); the SQL oracle stays on the portable
+        # string path and the oracle compare would surface one.
+        hlit = sorted(set(hashes))
+        # one SQL-parsed literal, NOT F.lit(list): the py4j
+        # element-by-element conversion costs ~0.5 us-free ms per
+        # element (~0.6s at 1,330 — measured), the parser ~3 ms
+        lith = F.expr(
+            "array(" + ",".join(f"{h}L" for h in hlit) + ")"
+        ) if hlit else F.lit([]).cast("array<bigint>")
+        doc_h = F.transform(
+            shingles_from_tokens(F.col("__toks"), n),
+            lambda s: F.xxhash64(s))
         return (toks.select(
                     "doc_id",
-                    F.size(F.array_intersect(
-                        lit, shingles_from_tokens(F.col("__toks"), n)))
+                    F.size(F.array_intersect(lith, doc_h))
                     .cast("bigint").alias("n_contaminated_ngrams"))
                 .withColumn("contaminated",
                             F.col("n_contaminated_ngrams") > 0))

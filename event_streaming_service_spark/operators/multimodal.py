@@ -1,52 +1,96 @@
 """Multimodal column plumbing (SURVEY.md section 2.12).
 
 Image/audio/video payloads are opaque `binary` columns with a typed
-metadata struct; decode / feature-extract / resize / frame-sample run
-as Arrow-batched Pandas UDFs over `mapInPandas`.
+metadata struct. Every codec operator is an Arrow-batched
+`mapInPandas` kernel run by one of two runners, which own the batch
+loop, the row framing and the id fan-out, so an operator states only
+its codec step:
 
-PNG decode is REAL (round-4): functions/png_codec.py implements the
-full container — chunk CRCs, zlib inflate, all five scanline filters —
-with nothing but the stdlib, so `attach_png_payload` /
-`extract_features_png` / `resize_png` below are byte-exact operators
-whose channel statistics an independent SQL oracle reproduces.
-Baseline grayscale JPEG decode is REAL too (round-5:
-functions/jpeg_codec.py — marker parse, canonical Annex-K Huffman,
-dequantize, IDCT), and VIDEO decode is REAL via APNG (round-5:
-functions/apng_codec.py — acTL/fcTL/fdAT chunks, an independent zlib
-stream per frame, reusing the PNG scanline filters): frame stats,
-frame sampling, and scene-cut detection below are byte-exact,
-oracle-checked operators. Round 7 made COLOR and PROGRESSIVE JPEG
-real (4:2:0 palette tiles, multi-scan spectral selection + successive
-approximation) plus MJPEG/AVI video; round 8 closed the LZW family
-with GIF87a/89a still + animated + index-grid resample
-(functions/gif_codec.py). Only formats that genuinely need external
-codec libraries absent from this container (interframe-compressed
-video, lossy audio) remain STUBBED behind `codec_libs_available`
-(clearly marked NotImplementedError).
+* `_encode_each(docs, id_col, encode)` — fixture prep:
+  `encode(doc_id)` returns one genuine payload and its metadata dict;
+* `_decode_each(media_df, schema, kernel)` — `kernel(doc_id, payload)`
+  decodes one payload and yields output rows in schema order (one row
+  per frame for the video kernels).
+
+The codecs are real and need only the stdlib and numpy
+(functions/*_codec.py): PNG and APNG (chunk CRCs, zlib inflate, all
+five scanline filters), baseline, color and progressive JPEG (Huffman,
+IDCT, 4:2:0 chroma, spectral selection + successive approximation),
+AVI/MJPEG, RIFF/PCM16 WAV, and GIF87a/89a with LZW. Each fixture
+payload is a closed integer formula of the doc id, so an independent
+SQL oracle recomputes every decoded statistic exactly. Formats that
+need codec libraries absent here (interframe-compressed video, lossy
+audio) are not decoded: `extract_features` and `resize_stub` compute
+byte-level stand-ins on the same batch shape.
 
 Scale notes: binary payloads ride the normal columnar path (parquet
 binary + Arrow batches); mapInPandas processes whole record batches so
-per-row Python overhead is amortized; one image-decode is the unit of
+per-row Python overhead is amortized; one payload decode is the unit of
 parallel work; frame sampling explodes rows *after* the filter so only
 sampled frames materialize.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-MEDIA_METADATA = T.StructType([
-    T.StructField("media_type", T.StringType()),
-    T.StructField("codec", T.StringType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("n_frames", T.IntegerType()),
-])
+# metadata struct of image and video payloads (DDL)
+MEDIA_METADATA = ("struct<media_type:string,codec:string,"
+                  "width:int,height:int,n_frames:int>")
+AUDIO_METADATA = ("struct<media_type:string,codec:string,"
+                  "sample_rate:int,n_channels:int,n_frames:int>")
+
+
+def _media(media_type: str, codec: str, w: int, h: int,
+           n_frames: int = 1) -> dict:
+    return {"media_type": media_type, "codec": codec,
+            "width": w, "height": h, "n_frames": n_frames}
+
+
+def _encode_each(docs: DataFrame, id_col: str,
+                 encode: Callable[[int], tuple[bytes, dict]],
+                 media: str = MEDIA_METADATA) -> DataFrame:
+    """Fixture-prep runner: `encode(doc_id) -> (payload, media dict)`
+    per document id, emitted as `doc_id bigint, payload binary,
+    media <media>` — the contract a parquet binary-column scan gives
+    downstream in production."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield pd.DataFrame(
+                [(doc_id, *encode(doc_id))
+                 for doc_id in pdf[id_col].astype("int64")],
+                columns=["doc_id", "payload", "media"])
+
+    # the id projection is a few bytes/row but the kernel is ~1 ms of
+    # codec work per row: fan the ids across the cluster FIRST, or the
+    # whole encode pipeline runs at the source file's parallelism (a
+    # single small parquet file -> one task; measured 4.1 s -> 0.5 s at
+    # sf0.1 on local[32])
+    n = docs.sparkSession.sparkContext.defaultParallelism
+    return docs.select(id_col).repartition(n).mapInPandas(
+        batches, f"doc_id bigint, payload binary, media {media}")
+
+
+def _decode_each(media_df: DataFrame, schema: str,
+                 kernel: Callable[[int, bytes], Iterator[tuple]]
+                 ) -> DataFrame:
+    """Decode runner: `kernel(doc_id, payload)` yields row tuples in
+    the order of `schema`'s columns, one per payload or one per frame."""
+    columns = [field.split()[0] for field in schema.split(",")]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield pd.DataFrame(
+                [row for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
+                 for row in kernel(int(doc_id), bytes(payload))],
+                columns=columns)
+
+    return media_df.mapInPandas(batches, schema)
 
 
 def attach_payload(docs: DataFrame, id_col: str = "doc_id",
@@ -71,23 +115,14 @@ FEATURE_SCHEMA = (
 )
 
 
-def extract_features(media_df: DataFrame, codec_libs_available: bool = False
-                     ) -> DataFrame:
-    """Decode + feature-extract via mapInPandas (Arrow batches).
-
-    With real codec libraries this would decode `payload` per
-    media.codec and emit model features; the container has none, so
-    requesting a real decode raises NotImplementedError and the default
-    path computes deterministic byte-level features (real computation,
-    real batch shape — only the codec call is faked).
-    """
+def extract_features(media_df: DataFrame) -> DataFrame:
+    """Byte-level features via mapInPandas (Arrow batches) for payloads
+    no codec here decodes: deterministic byte statistics plus the
+    metadata dimensions (real computation, real batch shape — only the
+    codec call is absent)."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            if codec_libs_available:
-                raise NotImplementedError(
-                    "real image/audio decode needs codec libs not present "
-                    "in this container (PIL/ffmpeg); plug them in here")
             payloads = pdf["payload"]
             yield pd.DataFrame({
                 "doc_id": pdf["doc_id"],
@@ -129,27 +164,23 @@ def resize_plan(media_df: DataFrame, max_w: int = 224, max_h: int = 224
 RESIZE_SCHEMA = "doc_id bigint, target_w int, target_h int, n_bytes int"
 
 
-def resize_stub(media_df: DataFrame, max_w: int = 224, max_h: int = 224,
-                codec_libs_available: bool = False) -> DataFrame:
-    """The pixel-resample step as mapInPandas plumbing: real batch
-    shape, real planned dimensions; the actual decode+resample raises
-    until codec libs exist (deterministic byte-slice fake otherwise)."""
+def resize_stub(media_df: DataFrame, max_w: int = 224, max_h: int = 224
+                ) -> DataFrame:
+    """The pixel-resample step as mapInPandas plumbing for payloads no
+    codec here decodes: real batch shape, real planned dimensions, and
+    a deterministic byte-slice stand-in for the resampled size."""
 
     planned = resize_plan(media_df, max_w, max_h).join(
         media_df.select("doc_id", "payload"), "doc_id")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            if codec_libs_available:
-                raise NotImplementedError(
-                    "real resample needs PIL/ffmpeg; plug the decode + "
-                    "interpolation in here")
             n = (pdf["target_w"] * pdf["target_h"] * 3).astype("int64")
             yield pd.DataFrame({
                 "doc_id": pdf["doc_id"],
                 "target_w": pdf["target_w"],
                 "target_h": pdf["target_h"],
-                # fake: clamp payload to the planned output size
+                # stand-in: clamp payload to the planned output size
                 "n_bytes": [min(len(b), int(m))
                             for b, m in zip(pdf["payload"], n)],
             })
@@ -157,7 +188,7 @@ def resize_stub(media_df: DataFrame, max_w: int = 224, max_h: int = 224,
     return planned.mapInPandas(batches, RESIZE_SCHEMA)
 
 
-# ---- real PNG path (functions/png_codec.py) -------------------------
+# ---- PNG (functions/png_codec.py) -----------------------------------
 
 # Deterministic synthetic image: pixel(x, y, c) =
 #   (doc_id % 128) + (x % 32) + (y % 32) + 10*c     (max 209, fits u8)
@@ -186,38 +217,16 @@ def _png_pixels(doc_id: int) -> "np.ndarray":
 
 
 def attach_png_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture prep for the real-decode path: one genuine PNG per
-    document (encoded by the pure-stdlib codec, deterministic gradient
-    pixels derived from the doc id) plus the typed metadata struct.
-    Production replaces this with a parquet binary column scan; the
-    schema contract downstream is identical."""
+    """Fixture prep for the PNG path: one genuine PNG per document
+    (pure-stdlib codec, deterministic gradient pixels derived from the
+    doc id) plus the typed metadata struct."""
     from event_streaming_service_spark.functions import png_codec
 
-    out_schema = ("doc_id bigint, payload binary,"
-                  " media struct<media_type:string,codec:string,"
-                  "width:int,height:int,n_frames:int>")
+    def encode(doc_id):
+        return (png_codec.encode_png(_png_pixels(doc_id)),
+                _media("image", "png", *_png_dims(doc_id)))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf[id_col].astype("int64")
-            rows = []
-            for doc_id in ids:
-                w, h = _png_dims(doc_id)
-                rows.append({
-                    "doc_id": doc_id,
-                    "payload": png_codec.encode_png(_png_pixels(doc_id)),
-                    "media": {"media_type": "image", "codec": "png",
-                              "width": w, "height": h, "n_frames": 1},
-                })
-            yield pd.DataFrame(rows)
-
-    # the id projection is a few bytes/row but the kernel is ~1 ms of
-    # codec work per row: fan the ids across the cluster FIRST, or the
-    # whole encode pipeline runs at the source file's parallelism (a
-    # single small parquet file -> one task; measured 4.1 s -> 0.5 s at
-    # sf0.1 on local[32])
-    n = docs.sparkSession.sparkContext.defaultParallelism
-    return docs.select(id_col).repartition(n).mapInPandas(batches, out_schema)
+    return _encode_each(docs, id_col, encode)
 
 
 PNG_FEATURE_SCHEMA = (
@@ -236,21 +245,14 @@ def extract_features_png(media_df: DataFrame) -> DataFrame:
     struct, so a payload/metadata mismatch surfaces as a hash break."""
     from event_streaming_service_spark.functions import png_codec
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                arr = png_codec.decode_png(bytes(payload))
-                h, w, _ = arr.shape
-                sums = arr.reshape(-1, 3).sum(axis=0, dtype="int64")
-                rows.append((int(doc_id), w, h,
-                             int(sums[0]), int(sums[1]), int(sums[2]),
-                             int(arr.min()), int(arr.max())))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "ch0_sum", "ch1_sum",
-                "ch2_sum", "px_min", "px_max"])
+    def kernel(doc_id, payload):
+        arr = png_codec.decode_png(payload)
+        h, w, _ = arr.shape
+        sums = arr.reshape(-1, 3).sum(axis=0, dtype="int64")
+        yield (doc_id, w, h, int(sums[0]), int(sums[1]), int(sums[2]),
+               int(arr.min()), int(arr.max()))
 
-    return media_df.mapInPandas(batches, PNG_FEATURE_SCHEMA)
+    return _decode_each(media_df, PNG_FEATURE_SCHEMA, kernel)
 
 
 PNG_RESIZE_SCHEMA = (
@@ -268,23 +270,16 @@ def resize_png(media_df: DataFrame, target_w: int, target_h: int
     chain exercises the whole codec both directions per row."""
     from event_streaming_service_spark.functions import png_codec
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                arr = png_codec.decode_png(bytes(payload))
-                h, w, _ = arr.shape
-                small = png_codec.resize_nearest(arr, target_w, target_h)
-                sums = small.reshape(-1, 3).sum(axis=0, dtype="int64")
-                out = png_codec.encode_png(small)
-                rows.append((int(doc_id), w, h, target_w, target_h,
-                             int(sums[0]), int(sums[1]), int(sums[2]),
-                             len(out)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "target_w", "target_h",
-                "ch0_sum", "ch1_sum", "ch2_sum", "out_bytes"])
+    def kernel(doc_id, payload):
+        arr = png_codec.decode_png(payload)
+        h, w, _ = arr.shape
+        small = png_codec.resize_nearest(arr, target_w, target_h)
+        sums = small.reshape(-1, 3).sum(axis=0, dtype="int64")
+        yield (doc_id, w, h, target_w, target_h,
+               int(sums[0]), int(sums[1]), int(sums[2]),
+               len(png_codec.encode_png(small)))
 
-    return media_df.mapInPandas(batches, PNG_RESIZE_SCHEMA)
+    return _decode_each(media_df, PNG_RESIZE_SCHEMA, kernel)
 
 
 PNG_DHASH_SCHEMA = "doc_id bigint, width int, height int, dhash string"
@@ -308,24 +303,18 @@ def image_dhash_png(media_df: DataFrame, grid_w: int = 9,
 
     from event_streaming_service_spark.functions import png_codec
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                arr = png_codec.decode_png(bytes(payload))
-                h, w, _ = arr.shape
-                gray = arr.astype("int64").sum(axis=2) // 3
-                sx = (np.arange(grid_w, dtype="int64") * w) // grid_w
-                sy = (np.arange(grid_h, dtype="int64") * h) // grid_h
-                g = gray[sy][:, sx]
-                bits = (g[:, 1:] > g[:, :-1]).astype("int64")
-                row_bytes = (bits << np.arange(grid_w - 1)).sum(axis=1)
-                dhash = "".join(f"{int(b):02x}" for b in row_bytes)
-                rows.append((int(doc_id), w, h, dhash))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "dhash"])
+    def kernel(doc_id, payload):
+        arr = png_codec.decode_png(payload)
+        h, w, _ = arr.shape
+        gray = arr.astype("int64").sum(axis=2) // 3
+        sx = (np.arange(grid_w, dtype="int64") * w) // grid_w
+        sy = (np.arange(grid_h, dtype="int64") * h) // grid_h
+        g = gray[sy][:, sx]
+        bits = (g[:, 1:] > g[:, :-1]).astype("int64")
+        row_bytes = (bits << np.arange(grid_w - 1)).sum(axis=1)
+        yield (doc_id, w, h, "".join(f"{int(b):02x}" for b in row_bytes))
 
-    return media_df.mapInPandas(batches, PNG_DHASH_SCHEMA)
+    return _decode_each(media_df, PNG_DHASH_SCHEMA, kernel)
 
 
 WAV_FINGERPRINT_SCHEMA = "doc_id bigint, n_frames bigint, afp string"
@@ -346,34 +335,28 @@ def audio_fingerprint_wav(media_df: DataFrame, n_points: int = 64
 
     from event_streaming_service_spark.functions import wav_codec
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                arr, _rate = wav_codec.decode_wav(bytes(payload))
-                n_frames = arr.shape[0]
-                ch0 = arr[:, 0].astype("int64")
-                src = (np.arange(n_points, dtype="int64")
-                       * n_frames) // n_points
-                s = ch0[src]
-                bits = (s[1:] > s[:-1]).astype("int64")  # n_points-1
-                n_bytes = (n_points - 1 + 7) // 8
-                row_bytes = []
-                for j in range(n_bytes):
-                    chunk = bits[j * 8:(j + 1) * 8]
-                    row_bytes.append(
-                        int((chunk << np.arange(len(chunk))).sum()))
-                afp = "".join(f"{b:02x}" for b in row_bytes)
-                rows.append((int(doc_id), int(n_frames), afp))
-            yield pd.DataFrame(rows, columns=["doc_id", "n_frames", "afp"])
+    def kernel(doc_id, payload):
+        arr, _rate = wav_codec.decode_wav(payload)
+        n_frames = arr.shape[0]
+        ch0 = arr[:, 0].astype("int64")
+        src = (np.arange(n_points, dtype="int64") * n_frames) // n_points
+        s = ch0[src]
+        bits = (s[1:] > s[:-1]).astype("int64")  # n_points-1
+        row_bytes = []
+        for j in range((n_points - 1 + 7) // 8):
+            chunk = bits[j * 8:(j + 1) * 8]
+            row_bytes.append(int((chunk << np.arange(len(chunk))).sum()))
+        yield (doc_id, int(n_frames),
+               "".join(f"{b:02x}" for b in row_bytes))
 
-    return media_df.mapInPandas(batches, WAV_FINGERPRINT_SCHEMA)
+    return _decode_each(media_df, WAV_FINGERPRINT_SCHEMA, kernel)
 
 
 def sample_frames(media_df: DataFrame, every_nth: int = 10) -> DataFrame:
     """Frame sampling: explode one row per sampled frame index — the
     row-multiplying step runs AFTER filtering so only kept frames
-    materialize. Decode of the sampled frame is the stubbed step."""
+    materialize. Decode of the sampled frame is not part of this step
+    (see sample_frames_apng for the decoding version)."""
     idx = F.sequence(F.lit(0), F.col("media.n_frames") - 1, F.lit(every_nth))
     return (
         media_df
@@ -409,35 +392,19 @@ def _jpeg_tiles(doc_id: int) -> "np.ndarray":
 
 
 def attach_jpeg_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture prep for the real JPEG path: one genuine baseline
-    grayscale JPEG per document (stdlib/numpy codec, constant-tile
-    pixels derived from the doc id) plus typed metadata. Production
-    replaces this with a parquet binary column scan."""
+    """Fixture prep for the JPEG path: one genuine baseline grayscale
+    JPEG per document (stdlib/numpy codec, constant-tile pixels derived
+    from the doc id) plus typed metadata."""
     import numpy as np
 
     from event_streaming_service_spark.functions import jpeg_codec
 
-    out_schema = ("doc_id bigint, payload binary,"
-                  " media struct<media_type:string,codec:string,"
-                  "width:int,height:int,n_frames:int>")
+    def encode(doc_id):
+        img = np.kron(_jpeg_tiles(doc_id), np.ones((8, 8), dtype="uint8"))
+        return (jpeg_codec.encode_jpeg(img),
+                _media("image", "jpeg", *_jpeg_dims(doc_id)))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col].astype("int64"):
-                w, h = _jpeg_dims(doc_id)
-                img = np.kron(_jpeg_tiles(doc_id),
-                              np.ones((8, 8), dtype="uint8"))
-                rows.append({
-                    "doc_id": doc_id,
-                    "payload": jpeg_codec.encode_jpeg(img),
-                    "media": {"media_type": "image", "codec": "jpeg",
-                              "width": w, "height": h, "n_frames": 1},
-                })
-            yield pd.DataFrame(rows)
-
-    n = docs.sparkSession.sparkContext.defaultParallelism
-    return docs.select(id_col).repartition(n).mapInPandas(batches, out_schema)
+    return _encode_each(docs, id_col, encode)
 
 
 JPEG_FEATURE_SCHEMA = (
@@ -454,20 +421,13 @@ def extract_features_jpeg(media_df: DataFrame) -> DataFrame:
     as hash breaks."""
     from event_streaming_service_spark.functions import jpeg_codec
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                arr = jpeg_codec.decode_jpeg(bytes(payload))
-                h, w = arr.shape
-                rows.append((int(doc_id), w, h, (h // 8) * (w // 8),
-                             int(arr.astype("int64").sum()),
-                             int(arr.min()), int(arr.max())))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "n_blocks",
-                "px_sum", "px_min", "px_max"])
+    def kernel(doc_id, payload):
+        arr = jpeg_codec.decode_jpeg(payload)
+        h, w = arr.shape
+        yield (doc_id, w, h, (h // 8) * (w // 8),
+               int(arr.astype("int64").sum()), int(arr.min()), int(arr.max()))
 
-    return media_df.mapInPandas(batches, JPEG_FEATURE_SCHEMA)
+    return _decode_each(media_df, JPEG_FEATURE_SCHEMA, kernel)
 
 
 JPEG_RESIZE_SCHEMA = (
@@ -491,25 +451,18 @@ def resize_jpeg(media_df: DataFrame, target_w: int, target_h: int
 
     from event_streaming_service_spark.functions import jpeg_codec
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                arr = jpeg_codec.decode_jpeg(bytes(payload))
-                h, w = arr.shape
-                sx = (np.arange(target_w, dtype="int64") * w) // target_w
-                sy = (np.arange(target_h, dtype="int64") * h) // target_h
-                small = arr[sy][:, sx]
-                out = jpeg_codec.encode_jpeg(small)
-                rows.append((int(doc_id), w, h, target_w, target_h,
-                             int(small.astype("int64").sum()),
-                             int(small.min()), int(small.max()),
-                             len(out)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "target_w", "target_h",
-                "px_sum", "px_min", "px_max", "out_bytes"])
+    def kernel(doc_id, payload):
+        arr = jpeg_codec.decode_jpeg(payload)
+        h, w = arr.shape
+        sx = (np.arange(target_w, dtype="int64") * w) // target_w
+        sy = (np.arange(target_h, dtype="int64") * h) // target_h
+        small = arr[sy][:, sx]
+        yield (doc_id, w, h, target_w, target_h,
+               int(small.astype("int64").sum()),
+               int(small.min()), int(small.max()),
+               len(jpeg_codec.encode_jpeg(small)))
 
-    return media_df.mapInPandas(batches, JPEG_RESIZE_SCHEMA)
+    return _decode_each(media_df, JPEG_RESIZE_SCHEMA, kernel)
 
 
 # ---------------------------------------------------------------- audio
@@ -541,40 +494,19 @@ def _wav_samples(doc_id: int) -> "np.ndarray":
 
 
 def attach_wav_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture prep for the real audio path: one genuine RIFF/PCM16 WAV
-    per document (pure-stdlib encoder, deterministic samples derived
-    from the doc id) plus typed metadata. Production replaces this with
-    a parquet binary column scan; the downstream schema contract is
-    identical."""
+    """Fixture prep for the audio path: one genuine RIFF/PCM16 WAV per
+    document (pure-stdlib encoder, deterministic samples derived from
+    the doc id) plus the audio metadata struct."""
     from event_streaming_service_spark.functions import wav_codec
 
-    out_schema = ("doc_id bigint, payload binary,"
-                  " media struct<media_type:string,codec:string,"
-                  "sample_rate:int,n_channels:int,n_frames:int>")
+    def encode(doc_id):
+        n_frames, n_channels = _wav_shape(doc_id)
+        return (wav_codec.encode_wav(_wav_samples(doc_id), WAV_SAMPLE_RATE),
+                {"media_type": "audio", "codec": "pcm16",
+                 "sample_rate": WAV_SAMPLE_RATE, "n_channels": n_channels,
+                 "n_frames": n_frames})
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col].astype("int64"):
-                n_frames, n_channels = _wav_shape(doc_id)
-                rows.append({
-                    "doc_id": doc_id,
-                    "payload": wav_codec.encode_wav(
-                        _wav_samples(doc_id), WAV_SAMPLE_RATE),
-                    "media": {"media_type": "audio", "codec": "pcm16",
-                              "sample_rate": WAV_SAMPLE_RATE,
-                              "n_channels": n_channels,
-                              "n_frames": n_frames},
-                })
-            yield pd.DataFrame(rows)
-
-    # the id projection is a few bytes/row but the kernel is ~1 ms of
-    # codec work per row: fan the ids across the cluster FIRST, or the
-    # whole encode pipeline runs at the source file's parallelism (a
-    # single small parquet file -> one task; measured 4.1 s -> 0.5 s at
-    # sf0.1 on local[32])
-    n = docs.sparkSession.sparkContext.defaultParallelism
-    return docs.select(id_col).repartition(n).mapInPandas(batches, out_schema)
+    return _encode_each(docs, id_col, encode, AUDIO_METADATA)
 
 
 WAV_FEATURE_SCHEMA = (
@@ -597,30 +529,20 @@ def extract_features_wav(media_df: DataFrame) -> DataFrame:
     query_defs/audio_queries.py."""
     from event_streaming_service_spark.functions import wav_codec
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                arr, rate = wav_codec.decode_wav(bytes(payload))
-                n_frames, n_channels = arr.shape
-                a64 = arr.astype("int64")
-                ch0 = a64[:, 0]
-                neg = ch0 < 0
-                rows.append((
-                    int(doc_id), rate, n_channels, n_frames,
-                    n_frames * 1000.0 / rate,
-                    int(ch0.sum()),
-                    int(a64[:, 1].sum()) if n_channels > 1 else None,
-                    int((ch0 * ch0).sum()),
-                    int(arr.min()), int(arr.max()),
-                    int((neg[1:] != neg[:-1]).sum()),
-                ))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "sample_rate", "n_channels", "n_frames",
-                "duration_ms", "ch0_sum", "ch1_sum", "ch0_sumsq",
-                "samp_min", "samp_max", "n_zero_cross"])
+    def kernel(doc_id, payload):
+        arr, rate = wav_codec.decode_wav(payload)
+        n_frames, n_channels = arr.shape
+        a64 = arr.astype("int64")
+        ch0 = a64[:, 0]
+        neg = ch0 < 0
+        yield (doc_id, rate, n_channels, n_frames, n_frames * 1000.0 / rate,
+               int(ch0.sum()),
+               int(a64[:, 1].sum()) if n_channels > 1 else None,
+               int((ch0 * ch0).sum()),
+               int(arr.min()), int(arr.max()),
+               int((neg[1:] != neg[:-1]).sum()))
 
-    return media_df.mapInPandas(batches, WAV_FEATURE_SCHEMA)
+    return _decode_each(media_df, WAV_FEATURE_SCHEMA, kernel)
 
 
 WAV_RESAMPLE_SCHEMA = (
@@ -640,30 +562,22 @@ def resample_wav(media_df: DataFrame, target_rate: int = 4000) -> DataFrame:
 
     from event_streaming_service_spark.functions import wav_codec
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                arr, rate = wav_codec.decode_wav(bytes(payload))
-                n_frames, n_channels = arr.shape
-                out_n = max(1, (n_frames * target_rate) // rate)
-                src = (np.arange(out_n, dtype="int64") * n_frames) // out_n
-                small = arr[src]
-                out = wav_codec.encode_wav(small, target_rate)
-                s64 = small.astype("int64")
-                rows.append((
-                    int(doc_id), n_frames, out_n, target_rate,
-                    int(s64[:, 0].sum()),
-                    int(s64[:, 1].sum()) if n_channels > 1 else None,
-                    len(out)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "n_frames", "out_frames", "out_rate",
-                "ch0_sum", "ch1_sum", "out_bytes"])
+    def kernel(doc_id, payload):
+        arr, rate = wav_codec.decode_wav(payload)
+        n_frames, n_channels = arr.shape
+        out_n = max(1, (n_frames * target_rate) // rate)
+        src = (np.arange(out_n, dtype="int64") * n_frames) // out_n
+        small = arr[src]
+        s64 = small.astype("int64")
+        yield (doc_id, n_frames, out_n, target_rate,
+               int(s64[:, 0].sum()),
+               int(s64[:, 1].sum()) if n_channels > 1 else None,
+               len(wav_codec.encode_wav(small, target_rate)))
 
-    return media_df.mapInPandas(batches, WAV_RESAMPLE_SCHEMA)
+    return _decode_each(media_df, WAV_RESAMPLE_SCHEMA, kernel)
 
 
-# ---- real APNG video path (functions/apng_codec.py) -----------------
+# ---- APNG video (functions/apng_codec.py) ---------------------------
 
 # Deterministic synthetic clip: pixel(x, y, c, f) =
 #   (doc_id % 80) + (x % 32) + (y % 32) + 10*c + 8*f + 40*[f >= cut]
@@ -698,36 +612,19 @@ def _apng_frames(doc_id: int) -> "np.ndarray":
 
 
 def attach_apng_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture prep for the real video path: one genuine APNG clip per
+    """Fixture prep for the video path: one genuine APNG clip per
     document (pure-stdlib encoder, deterministic gradient frames with
-    a planted mid-clip scene cut) plus the typed metadata struct.
-    Production replaces this with a parquet binary column scan; the
-    schema contract downstream is identical."""
+    a planted mid-clip scene cut) plus the typed metadata struct."""
     from event_streaming_service_spark.functions import apng_codec
 
-    out_schema = ("doc_id bigint, payload binary,"
-                  " media struct<media_type:string,codec:string,"
-                  "width:int,height:int,n_frames:int>")
+    def encode(doc_id):
+        return (apng_codec.encode_apng(_apng_frames(doc_id)),
+                _media("video", "apng", *_apng_shape(doc_id)))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col].astype("int64"):
-                w, h, n = _apng_shape(doc_id)
-                rows.append({
-                    "doc_id": doc_id,
-                    "payload": apng_codec.encode_apng(_apng_frames(doc_id)),
-                    "media": {"media_type": "video", "codec": "apng",
-                              "width": w, "height": h, "n_frames": n},
-                })
-            yield pd.DataFrame(rows)
-
-    # same fan-out rationale as attach_png_payload: the encode kernel,
-    # not the id scan, is the cost — repartition ids first
-    n = docs.sparkSession.sparkContext.defaultParallelism
-    return docs.select(id_col).repartition(n).mapInPandas(batches, out_schema)
+    return _encode_each(docs, id_col, encode)
 
 
+# per-frame rows of the APNG and MJPEG scene-cut kernels
 APNG_FRAME_SCHEMA = (
     "doc_id bigint, frame_idx int, width int, height int, "
     "ch0_sum bigint, ch1_sum bigint, ch2_sum bigint, "
@@ -753,27 +650,20 @@ def video_frame_stats_apng(media_df: DataFrame,
 
     from event_streaming_service_spark.functions import apng_codec
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                fr = apng_codec.decode_apng(bytes(payload))
-                n, h, w, _ = fr.shape
-                sums = fr.reshape(n, -1, 3).sum(axis=1, dtype="int64")
-                deltas = np.abs(
-                    fr[1:].astype("int64") - fr[:-1].astype("int64")
-                ).reshape(n - 1, -1).sum(axis=1) if n > 1 else []
-                lim = cut_threshold * w * h * 3
-                for f in range(n):
-                    d = int(deltas[f - 1]) if f > 0 else 0
-                    rows.append((int(doc_id), f, w, h,
-                                 int(sums[f, 0]), int(sums[f, 1]),
-                                 int(sums[f, 2]), d, d > lim))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "frame_idx", "width", "height", "ch0_sum",
-                "ch1_sum", "ch2_sum", "diff_sum", "is_cut"])
+    def kernel(doc_id, payload):
+        fr = apng_codec.decode_apng(payload)
+        n, h, w, _ = fr.shape
+        sums = fr.reshape(n, -1, 3).sum(axis=1, dtype="int64")
+        deltas = np.abs(
+            fr[1:].astype("int64") - fr[:-1].astype("int64")
+        ).reshape(n - 1, -1).sum(axis=1) if n > 1 else []
+        lim = cut_threshold * w * h * 3
+        for f in range(n):
+            d = int(deltas[f - 1]) if f > 0 else 0
+            yield (doc_id, f, w, h, int(sums[f, 0]), int(sums[f, 1]),
+                   int(sums[f, 2]), d, d > lim)
 
-    return media_df.mapInPandas(batches, APNG_FRAME_SCHEMA)
+    return _decode_each(media_df, APNG_FRAME_SCHEMA, kernel)
 
 
 APNG_SAMPLE_SCHEMA = (
@@ -791,24 +681,16 @@ def sample_frames_apng(media_df: DataFrame, every_nth: int = 4) -> DataFrame:
     stream is sequential, but the output is pre-pruned)."""
     from event_streaming_service_spark.functions import apng_codec
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                fr = apng_codec.decode_apng(bytes(payload))
-                n, h, w, _ = fr.shape
-                keep = fr[::every_nth]
-                sums = keep.reshape(len(keep), -1, 3).sum(
-                    axis=1, dtype="int64")
-                for j, f in enumerate(range(0, n, every_nth)):
-                    rows.append((int(doc_id), f, w, h,
-                                 int(sums[j, 0]), int(sums[j, 1]),
-                                 int(sums[j, 2])))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "frame_idx", "width", "height",
-                "ch0_sum", "ch1_sum", "ch2_sum"])
+    def kernel(doc_id, payload):
+        fr = apng_codec.decode_apng(payload)
+        n, h, w, _ = fr.shape
+        keep = fr[::every_nth]
+        sums = keep.reshape(len(keep), -1, 3).sum(axis=1, dtype="int64")
+        for j, f in enumerate(range(0, n, every_nth)):
+            yield (doc_id, f, w, h,
+                   int(sums[j, 0]), int(sums[j, 1]), int(sums[j, 2]))
 
-    return media_df.mapInPandas(batches, APNG_SAMPLE_SCHEMA)
+    return _decode_each(media_df, APNG_SAMPLE_SCHEMA, kernel)
 
 
 # ----------------------------------------------------- jpeg (color)
@@ -823,7 +705,7 @@ def sample_frames_apng(media_df: DataFrame, every_nth: int = 4) -> DataFrame:
 # that chain's output per palette entry; palette members were chosen
 # so no rounding in the chain sits within 1e-6 of a half-way boundary
 # (and no chroma DC ≡ 4 mod 8, the one step where the float DCT's
-# ~1e-13 residue could flip a floor(x+0.5)). tests/test_multimodal
+# ~1e-13 residue could flip a floor(x+0.5)). tests/test_jpeg_codec
 # asserts codec-vs-chain equality so these literals cannot rot.
 JPEG_COLOR_PALETTE = (
     (220, 40, 40), (180, 60, 200), (40, 200, 200), (90, 90, 90),
@@ -851,33 +733,18 @@ def _jpeg_color_tiles(doc_id: int) -> "np.ndarray":
 def attach_jpeg_color_payload(docs: DataFrame,
                               id_col: str = "doc_id") -> DataFrame:
     """Fixture prep for the color JPEG path: one genuine baseline
-    YCbCr 4:2:0 JPEG per document (palette-tiled MCUs). Production
-    replaces this with a parquet binary column scan."""
+    YCbCr 4:2:0 JPEG per document (palette-tiled MCUs)."""
     import numpy as np
 
     from event_streaming_service_spark.functions import jpeg_codec
 
-    out_schema = ("doc_id bigint, payload binary,"
-                  " media struct<media_type:string,codec:string,"
-                  "width:int,height:int,n_frames:int>")
+    def encode(doc_id):
+        tiles = _jpeg_color_tiles(doc_id)
+        img = np.repeat(np.repeat(tiles, 16, axis=0), 16, axis=1)
+        return (jpeg_codec.encode_jpeg_color(img),
+                _media("image", "jpeg", *_jpeg_color_dims(doc_id)))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col].astype("int64"):
-                w, h = _jpeg_color_dims(doc_id)
-                tiles = _jpeg_color_tiles(doc_id)
-                img = np.repeat(np.repeat(tiles, 16, axis=0), 16, axis=1)
-                rows.append({
-                    "doc_id": doc_id,
-                    "payload": jpeg_codec.encode_jpeg_color(img),
-                    "media": {"media_type": "image", "codec": "jpeg",
-                              "width": w, "height": h, "n_frames": 1},
-                })
-            yield pd.DataFrame(rows)
-
-    n = docs.sparkSession.sparkContext.defaultParallelism
-    return docs.select(id_col).repartition(n).mapInPandas(batches, out_schema)
+    return _encode_each(docs, id_col, encode)
 
 
 JPEG_COLOR_FEATURE_SCHEMA = (
@@ -894,23 +761,14 @@ def extract_features_jpeg_color(media_df: DataFrame) -> DataFrame:
     from the decoded SOF0 header."""
     from event_streaming_service_spark.functions import jpeg_codec
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                arr = jpeg_codec.decode_jpeg_color(bytes(payload))
-                h, w = arr.shape[:2]
-                a = arr.astype("int64")
-                rows.append((int(doc_id), w, h,
-                             (h // 16) * (w // 16),
-                             int(a[..., 0].sum()), int(a[..., 1].sum()),
-                             int(a[..., 2].sum()),
-                             int(a.min()), int(a.max())))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "n_tiles",
-                "r_sum", "g_sum", "b_sum", "px_min", "px_max"])
+    def kernel(doc_id, payload):
+        a = jpeg_codec.decode_jpeg_color(payload).astype("int64")
+        h, w = a.shape[:2]
+        yield (doc_id, w, h, (h // 16) * (w // 16),
+               int(a[..., 0].sum()), int(a[..., 1].sum()),
+               int(a[..., 2].sum()), int(a.min()), int(a.max()))
 
-    return media_df.mapInPandas(batches, JPEG_COLOR_FEATURE_SCHEMA)
+    return _decode_each(media_df, JPEG_COLOR_FEATURE_SCHEMA, kernel)
 
 
 # ------------------------------------------------- video (AVI/MJPEG)
@@ -943,8 +801,7 @@ def attach_mjpeg_payload(docs: DataFrame,
                          id_col: str = "doc_id") -> DataFrame:
     """Fixture prep for the general-video path: one genuine MJPG AVI
     per document — a RIFF container (functions/avi_codec.py) holding
-    nf real baseline color JPEGs. Production replaces this with a
-    parquet binary column scan."""
+    nf real baseline color JPEGs."""
     import numpy as np
 
     from event_streaming_service_spark.functions import (
@@ -952,40 +809,16 @@ def attach_mjpeg_payload(docs: DataFrame,
         jpeg_codec,
     )
 
-    out_schema = ("doc_id bigint, payload binary,"
-                  " media struct<media_type:string,codec:string,"
-                  "width:int,height:int,n_frames:int>")
+    def encode(doc_id):
+        w, h, nf = _mjpeg_shape(doc_id)
+        frames = [
+            jpeg_codec.encode_jpeg_color(np.repeat(np.repeat(
+                _mjpeg_tiles(doc_id, f, nf), 16, axis=0), 16, axis=1))
+            for f in range(nf)]
+        return (avi_codec.encode_avi_mjpeg(frames, w, h, fps=10),
+                _media("video", "mjpeg", w, h, nf))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col].astype("int64"):
-                w, h, nf = _mjpeg_shape(doc_id)
-                frames = []
-                for f in range(nf):
-                    tiles = _mjpeg_tiles(doc_id, f, nf)
-                    img = np.repeat(np.repeat(tiles, 16, axis=0),
-                                    16, axis=1)
-                    frames.append(jpeg_codec.encode_jpeg_color(img))
-                rows.append({
-                    "doc_id": doc_id,
-                    "payload": avi_codec.encode_avi_mjpeg(
-                        frames, w, h, fps=10),
-                    "media": {"media_type": "video", "codec": "mjpeg",
-                              "width": w, "height": h,
-                              "n_frames": nf},
-                })
-            yield pd.DataFrame(rows)
-
-    n = docs.sparkSession.sparkContext.defaultParallelism
-    return docs.select(id_col).repartition(n).mapInPandas(batches, out_schema)
-
-
-MJPEG_FRAME_SCHEMA = (
-    "doc_id bigint, frame_idx int, width int, height int, "
-    "ch0_sum bigint, ch1_sum bigint, ch2_sum bigint, "
-    "diff_sum bigint, is_cut boolean"
-)
+    return _encode_each(docs, id_col, encode)
 
 
 def video_frame_stats_mjpeg(media_df: DataFrame,
@@ -1004,34 +837,23 @@ def video_frame_stats_mjpeg(media_df: DataFrame,
         jpeg_codec,
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                avi = avi_codec.decode_avi_mjpeg(bytes(payload))
-                w, h = avi["width"], avi["height"]
-                prev = None
-                for f, jp in enumerate(avi["frames"]):
-                    arr = jpeg_codec.decode_jpeg_color(jp) \
-                        .astype("int64")
-                    if arr.shape != (h, w, 3):
-                        raise ValueError(
-                            f"AVI: frame {f} is {arr.shape[1]}x"
-                            f"{arr.shape[0]}, header says {w}x{h}")
-                    diff = (0 if prev is None
-                            else int(np.abs(arr - prev).sum()))
-                    rows.append((int(doc_id), f, w, h,
-                                 int(arr[..., 0].sum()),
-                                 int(arr[..., 1].sum()),
-                                 int(arr[..., 2].sum()),
-                                 diff,
-                                 diff > cut_threshold * w * h * 3))
-                    prev = arr
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "frame_idx", "width", "height",
-                "ch0_sum", "ch1_sum", "ch2_sum", "diff_sum", "is_cut"])
+    def kernel(doc_id, payload):
+        avi = avi_codec.decode_avi_mjpeg(payload)
+        w, h = avi["width"], avi["height"]
+        prev = None
+        for f, jp in enumerate(avi["frames"]):
+            arr = jpeg_codec.decode_jpeg_color(jp).astype("int64")
+            if arr.shape != (h, w, 3):
+                raise ValueError(
+                    f"AVI: frame {f} is {arr.shape[1]}x"
+                    f"{arr.shape[0]}, header says {w}x{h}")
+            diff = 0 if prev is None else int(np.abs(arr - prev).sum())
+            yield (doc_id, f, w, h, int(arr[..., 0].sum()),
+                   int(arr[..., 1].sum()), int(arr[..., 2].sum()),
+                   diff, diff > cut_threshold * w * h * 3)
+            prev = arr
 
-    return media_df.mapInPandas(batches, MJPEG_FRAME_SCHEMA)
+    return _decode_each(media_df, APNG_FRAME_SCHEMA, kernel)
 
 
 def attach_jpeg_progressive_payload(docs: DataFrame,
@@ -1046,28 +868,12 @@ def attach_jpeg_progressive_payload(docs: DataFrame,
 
     from event_streaming_service_spark.functions import jpeg_codec
 
-    out_schema = ("doc_id bigint, payload binary,"
-                  " media struct<media_type:string,codec:string,"
-                  "width:int,height:int,n_frames:int>")
+    def encode(doc_id):
+        img = np.kron(_jpeg_tiles(doc_id), np.ones((8, 8), dtype="uint8"))
+        return (jpeg_codec.encode_jpeg_progressive(img),
+                _media("image", "jpeg-progressive", *_jpeg_dims(doc_id)))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col].astype("int64"):
-                w, h = _jpeg_dims(doc_id)
-                img = np.kron(_jpeg_tiles(doc_id),
-                              np.ones((8, 8), dtype="uint8"))
-                rows.append({
-                    "doc_id": doc_id,
-                    "payload": jpeg_codec.encode_jpeg_progressive(img),
-                    "media": {"media_type": "image",
-                              "codec": "jpeg-progressive",
-                              "width": w, "height": h, "n_frames": 1},
-                })
-            yield pd.DataFrame(rows)
-
-    n = docs.sparkSession.sparkContext.defaultParallelism
-    return docs.select(id_col).repartition(n).mapInPandas(batches, out_schema)
+    return _encode_each(docs, id_col, encode)
 
 
 def extract_features_jpeg_progressive(media_df: DataFrame) -> DataFrame:
@@ -1077,20 +883,13 @@ def extract_features_jpeg_progressive(media_df: DataFrame) -> DataFrame:
     same output schema as extract_features_jpeg."""
     from event_streaming_service_spark.functions import jpeg_codec
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                arr = jpeg_codec.decode_jpeg_progressive(bytes(payload))
-                h, w = arr.shape
-                rows.append((int(doc_id), w, h, (h // 8) * (w // 8),
-                             int(arr.astype("int64").sum()),
-                             int(arr.min()), int(arr.max())))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "n_blocks",
-                "px_sum", "px_min", "px_max"])
+    def kernel(doc_id, payload):
+        arr = jpeg_codec.decode_jpeg_progressive(payload)
+        h, w = arr.shape
+        yield (doc_id, w, h, (h // 8) * (w // 8),
+               int(arr.astype("int64").sum()), int(arr.min()), int(arr.max()))
 
-    return media_df.mapInPandas(batches, JPEG_FEATURE_SCHEMA)
+    return _decode_each(media_df, JPEG_FEATURE_SCHEMA, kernel)
 
 
 def attach_jpeg_progressive_color_payload(
@@ -1103,29 +902,14 @@ def attach_jpeg_progressive_color_payload(
 
     from event_streaming_service_spark.functions import jpeg_codec
 
-    out_schema = ("doc_id bigint, payload binary,"
-                  " media struct<media_type:string,codec:string,"
-                  "width:int,height:int,n_frames:int>")
+    def encode(doc_id):
+        tiles = _jpeg_color_tiles(doc_id)
+        img = np.repeat(np.repeat(tiles, 16, axis=0), 16, axis=1)
+        return (jpeg_codec.encode_jpeg_progressive_color(img),
+                _media("image", "jpeg-progressive",
+                       *_jpeg_color_dims(doc_id)))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col].astype("int64"):
-                w, h = _jpeg_color_dims(doc_id)
-                tiles = _jpeg_color_tiles(doc_id)
-                img = np.repeat(np.repeat(tiles, 16, axis=0), 16, axis=1)
-                rows.append({
-                    "doc_id": doc_id,
-                    "payload":
-                        jpeg_codec.encode_jpeg_progressive_color(img),
-                    "media": {"media_type": "image",
-                              "codec": "jpeg-progressive",
-                              "width": w, "height": h, "n_frames": 1},
-                })
-            yield pd.DataFrame(rows)
-
-    n = docs.sparkSession.sparkContext.defaultParallelism
-    return docs.select(id_col).repartition(n).mapInPandas(batches, out_schema)
+    return _encode_each(docs, id_col, encode)
 
 
 def extract_features_jpeg_progressive_color(
@@ -1135,30 +919,19 @@ def extract_features_jpeg_progressive_color(
     per-channel stats — same schema as extract_features_jpeg_color."""
     from event_streaming_service_spark.functions import jpeg_codec
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                arr = jpeg_codec.decode_jpeg_progressive_color(
-                    bytes(payload))
-                h, w = arr.shape[:2]
-                a = arr.astype("int64")
-                rows.append((int(doc_id), w, h,
-                             (h // 16) * (w // 16),
-                             int(a[..., 0].sum()), int(a[..., 1].sum()),
-                             int(a[..., 2].sum()),
-                             int(a.min()), int(a.max())))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "n_tiles",
-                "r_sum", "g_sum", "b_sum", "px_min", "px_max"])
+    def kernel(doc_id, payload):
+        a = jpeg_codec.decode_jpeg_progressive_color(payload).astype("int64")
+        h, w = a.shape[:2]
+        yield (doc_id, w, h, (h // 16) * (w // 16),
+               int(a[..., 0].sum()), int(a[..., 1].sum()),
+               int(a[..., 2].sum()), int(a.min()), int(a.max()))
 
-    return media_df.mapInPandas(batches, JPEG_COLOR_FEATURE_SCHEMA)
+    return _decode_each(media_df, JPEG_COLOR_FEATURE_SCHEMA, kernel)
 
 
 # ------------------------------------------------------ gif (LZW)
 
-# Deterministic synthetic palette image (round 8 — the LZW decode
-# path, functions/gif_codec.py):
+# Deterministic synthetic palette image (functions/gif_codec.py):
 #   index(x, y)   = (doc_id + x + 3*y) % n_colors
 #   palette(i)    = ((37*i + doc_id) % 256,
 #                    (59*i + 2*doc_id) % 256,
@@ -1208,37 +981,18 @@ def attach_gif_payload(docs: DataFrame, id_col: str = "doc_id",
     """Fixture prep for the LZW decode path: one genuine GIF per
     document (pure-stdlib encoder — variable-width LZW, sub-block
     framing, padded global color table), single-frame by default or a
-    cyclic-palette-shift animation with `animated`. Production
-    replaces this with a parquet binary column scan; the schema
-    contract downstream is identical."""
+    cyclic-palette-shift animation with `animated`."""
     from event_streaming_service_spark.functions import gif_codec
 
-    out_schema = ("doc_id bigint, payload binary,"
-                  " media struct<media_type:string,codec:string,"
-                  "width:int,height:int,n_frames:int>")
+    def encode(doc_id):
+        w, h, _nc, nf = _gif_shape(doc_id)
+        frames, pal = _gif_frames(doc_id)
+        if not animated:
+            frames, nf = frames[:1], 1
+        return (gif_codec.encode_gif(frames, pal),
+                _media("video" if animated else "image", "gif", w, h, nf))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col].astype("int64"):
-                w, h, nc, nf = _gif_shape(doc_id)
-                frames, pal = _gif_frames(doc_id)
-                if not animated:
-                    frames, nf = frames[:1], 1
-                rows.append({
-                    "doc_id": doc_id,
-                    "payload": gif_codec.encode_gif(frames, pal),
-                    "media": {"media_type":
-                              "video" if animated else "image",
-                              "codec": "gif", "width": w, "height": h,
-                              "n_frames": nf},
-                })
-            yield pd.DataFrame(rows)
-
-    # same fan-out rationale as attach_png_payload: the encode kernel,
-    # not the id scan, is the cost — repartition ids first
-    n = docs.sparkSession.sparkContext.defaultParallelism
-    return docs.select(id_col).repartition(n).mapInPandas(batches, out_schema)
+    return _encode_each(docs, id_col, encode)
 
 
 GIF_FEATURE_SCHEMA = (
@@ -1258,23 +1012,15 @@ def extract_features_gif(media_df: DataFrame) -> DataFrame:
 
     from event_streaming_service_spark.functions import gif_codec
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                frames, pal = gif_codec.decode_gif(bytes(payload))
-                idx = frames[0]
-                h, w = idx.shape
-                rgb = pal[idx].astype("int64")        # (h, w, 3)
-                sums = rgb.reshape(-1, 3).sum(axis=0)
-                rows.append((int(doc_id), w, h,
-                             int(len(np.unique(idx))),
-                             int(sums[0]), int(sums[1]), int(sums[2])))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "n_colors_used",
-                "ch0_sum", "ch1_sum", "ch2_sum"])
+    def kernel(doc_id, payload):
+        frames, pal = gif_codec.decode_gif(payload)
+        idx = frames[0]
+        h, w = idx.shape
+        sums = pal[idx].astype("int64").reshape(-1, 3).sum(axis=0)
+        yield (doc_id, w, h, int(len(np.unique(idx))),
+               int(sums[0]), int(sums[1]), int(sums[2]))
 
-    return media_df.mapInPandas(batches, GIF_FEATURE_SCHEMA)
+    return _decode_each(media_df, GIF_FEATURE_SCHEMA, kernel)
 
 
 GIF_FRAME_SCHEMA = (
@@ -1293,26 +1039,19 @@ def video_frame_stats_gif(media_df: DataFrame) -> DataFrame:
 
     from event_streaming_service_spark.functions import gif_codec
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                frames, pal = gif_codec.decode_gif(bytes(payload))
-                rgb = pal[frames].astype("int64")     # (nf, h, w, 3)
-                nf, h, w, _ = rgb.shape
-                sums = rgb.reshape(nf, -1, 3).sum(axis=1)
-                deltas = np.abs(rgb[1:] - rgb[:-1]) \
-                    .reshape(nf - 1, -1).sum(axis=1) if nf > 1 else []
-                for f in range(nf):
-                    rows.append((int(doc_id), f, w, h,
-                                 int(sums[f, 0]), int(sums[f, 1]),
-                                 int(sums[f, 2]),
-                                 int(deltas[f - 1]) if f > 0 else 0))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "frame_idx", "width", "height",
-                "ch0_sum", "ch1_sum", "ch2_sum", "diff_sum"])
+    def kernel(doc_id, payload):
+        frames, pal = gif_codec.decode_gif(payload)
+        rgb = pal[frames].astype("int64")     # (nf, h, w, 3)
+        nf, h, w, _ = rgb.shape
+        sums = rgb.reshape(nf, -1, 3).sum(axis=1)
+        deltas = np.abs(rgb[1:] - rgb[:-1]) \
+            .reshape(nf - 1, -1).sum(axis=1) if nf > 1 else []
+        for f in range(nf):
+            yield (doc_id, f, w, h,
+                   int(sums[f, 0]), int(sums[f, 1]), int(sums[f, 2]),
+                   int(deltas[f - 1]) if f > 0 else 0)
 
-    return media_df.mapInPandas(batches, GIF_FRAME_SCHEMA)
+    return _decode_each(media_df, GIF_FRAME_SCHEMA, kernel)
 
 
 GIF_RESIZE_SCHEMA = (
@@ -1335,27 +1074,19 @@ def resize_gif(media_df: DataFrame, target_w: int, target_h: int
     from event_streaming_service_spark.functions.png_codec import (
         resize_nearest)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                frames, pal = gif_codec.decode_gif(bytes(payload))
-                h, w = frames[0].shape
-                # index grid as (H, W, 1) rides the shared
-                # nearest-neighbor index math from the PNG codec
-                small = resize_nearest(
-                    frames[0][:, :, None], target_w, target_h)[:, :, 0]
-                out = gif_codec.encode_gif(small, pal)
-                rgb = pal[small].astype("int64")
-                sums = rgb.reshape(-1, 3).sum(axis=0)
-                rows.append((int(doc_id), w, h, target_w, target_h,
-                             int(sums[0]), int(sums[1]), int(sums[2]),
-                             len(out)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "target_w", "target_h",
-                "ch0_sum", "ch1_sum", "ch2_sum", "out_bytes"])
+    def kernel(doc_id, payload):
+        frames, pal = gif_codec.decode_gif(payload)
+        h, w = frames[0].shape
+        # index grid as (H, W, 1) rides the shared nearest-neighbor
+        # index math from the PNG codec
+        small = resize_nearest(
+            frames[0][:, :, None], target_w, target_h)[:, :, 0]
+        sums = pal[small].astype("int64").reshape(-1, 3).sum(axis=0)
+        yield (doc_id, w, h, target_w, target_h,
+               int(sums[0]), int(sums[1]), int(sums[2]),
+               len(gif_codec.encode_gif(small, pal)))
 
-    return media_df.mapInPandas(batches, GIF_RESIZE_SCHEMA)
+    return _decode_each(media_df, GIF_RESIZE_SCHEMA, kernel)
 
 
 def image_text_dup_pairs(media_df: DataFrame, docs: DataFrame,

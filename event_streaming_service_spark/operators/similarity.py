@@ -112,7 +112,6 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
 def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int,
                 id_col: str = "vec_id", vec_col: str = "embedding",
                 max_broadcast_rows: int = 200_000,
-                n_corpus: int | None = None,
                 corpus_path: str | None = None) -> DataFrame:
     """Brute-force cosine top-k: for every query vector, the k nearest
     corpus vectors (self excluded). Cosine is rounded to 6 decimals
@@ -134,11 +133,11 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int,
       n_tiles, and the exact top-k is preserved because every global
       top-k member wins its own tile.
 
-    Dispatch is metadata-driven: pass `n_corpus` (known cardinality) or
-    `corpus_path` (parquet file whose rows ARE the corpus — the count
-    comes from the footer, and on the broadcast path the matrix is read
-    driver-side via Arrow) so choosing a strategy costs zero Spark
-    jobs. Without either hint, falls back to `corpus.count()`.
+    Dispatch is metadata-driven: pass `corpus_path` (parquet file whose
+    rows ARE the corpus — the count comes from the footer, and on the
+    broadcast path the matrix is read driver-side via Arrow) so
+    choosing a strategy costs zero Spark jobs. Without it, falls back
+    to `corpus.count()`.
     """
     import numpy as np
     import pandas as pd
@@ -163,13 +162,12 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int,
                                  "cosine": pd.Series(dtype="float64")})
         return pd.concat(out, ignore_index=True)
 
-    if n_corpus is None:
-        n_corpus = (_parquet_num_rows(corpus_path) if corpus_path
-                    else corpus.count())
+    n_vecs = (_parquet_num_rows(corpus_path) if corpus_path
+              else corpus.count())
     q = queries.select(F.col(id_col).alias("qid"),
                        as_double(F.col(vec_col)).alias("qv"))
 
-    if n_corpus <= max_broadcast_rows:
+    if n_vecs <= max_broadcast_rows:
         if corpus_path:
             ids, mat, norms = _read_corpus_arrow(corpus_path, id_col, vec_col)
         else:
@@ -204,7 +202,7 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int,
         return fan_out(q).mapInPandas(
             score, "query_id long, neighbor_id long, cosine double, rank int")
 
-    n_tiles = -(-n_corpus // max_broadcast_rows)
+    n_tiles = -(-n_vecs // max_broadcast_rows)
     c = _with_tile(corpus, n_tiles, id_col, vec_col, "cid", "cv")
     qx = q.withColumn(
         "tile", F.explode(F.sequence(F.lit(0), F.lit(int(n_tiles) - 1))))
@@ -308,7 +306,6 @@ def cosine_near_dup_pairs(vectors: DataFrame, threshold: float,
                           id_col: str = "vec_id",
                           vec_col: str = "embedding",
                           max_broadcast_rows: int = 200_000,
-                          n_rows: int | None = None,
                           corpus_path: str | None = None) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine >=
     threshold) — the embedding leg of the dedup family.
@@ -330,19 +327,18 @@ def cosine_near_dup_pairs(vectors: DataFrame, threshold: float,
     independent blocks; the LSH/IVF buckets above remain the
     sub-quadratic candidate path.
 
-    Like cosine_topk, dispatch takes an optional `n_rows` /
-    `corpus_path` hint so strategy choice (and the broadcast-matrix
-    build, via a driver-side Arrow read) costs zero Spark jobs.
+    Like cosine_topk, dispatch takes an optional `corpus_path` hint so
+    strategy choice (and the broadcast-matrix build, via a driver-side
+    Arrow read) costs zero Spark jobs.
     """
     import numpy as np
     import pandas as pd
 
-    if n_rows is None:
-        n_rows = (_parquet_num_rows(corpus_path) if corpus_path
-                  else vectors.count())
+    n_vecs = (_parquet_num_rows(corpus_path) if corpus_path
+              else vectors.count())
     from event_streaming_service_spark.operators.text import fan_out
 
-    if n_rows <= max_broadcast_rows:
+    if n_vecs <= max_broadcast_rows:
         if corpus_path:
             ids, mat, norms = _read_corpus_arrow(corpus_path, id_col, vec_col)
         else:
@@ -377,7 +373,7 @@ def cosine_near_dup_pairs(vectors: DataFrame, threshold: float,
                                         as_double(F.col(vec_col)).alias("v")))
         return q_side.mapInPandas(score, "id_a long, id_b long, cosine double")
 
-    n_tiles = -(-n_rows // max_broadcast_rows)
+    n_tiles = -(-n_vecs // max_broadcast_rows)
     c = _with_tile(vectors, n_tiles, id_col, vec_col, "cid", "cv")
     probes = (vectors.select(F.col(id_col).alias("qid"),
                              as_double(F.col(vec_col)).alias("qv"))

@@ -1,6 +1,7 @@
 """Multimodal-column queries (SURVEY.md section 2.12): binary payload
-plumbing with typed metadata; decode stubbed (no codec libs in the
-container), byte-level features and frame-sampling plumbing real."""
+plumbing with typed metadata, real pure-stdlib decode (PNG/APNG, JPEG,
+AVI/MJPEG, GIF), and two byte-level stand-in queries for formats no
+codec here decodes."""
 
 from __future__ import annotations
 

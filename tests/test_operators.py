@@ -3,6 +3,7 @@ cases (FIXTURES.md section 4 micro-fixtures)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from event_streaming_service_spark.operators import (
@@ -149,11 +150,54 @@ def test_multimodal_features_and_stub(spark, sf_smoke):
     assert {c for c in feats.columns} == {
         "doc_id", "n_bytes", "head_byte", "byte_sum_mod", "width", "height"}
     assert all(r.n_bytes > 0 for r in rows)
-    # the real-decode path must be a clearly-marked stub
-    import pytest
 
-    with pytest.raises(Exception, match="NotImplementedError|codec"):
-        multimodal.extract_features(media, codec_libs_available=True).collect()
+
+def _reencoded_len(codec, payload, target_w, target_h):
+    """Length of the codec re-encoding of a nearest-neighbor resized
+    decode, resized with the documented map src = (dst*size)//target."""
+    import numpy as np
+
+    from event_streaming_service_spark.functions import (
+        gif_codec,
+        jpeg_codec,
+        png_codec,
+    )
+
+    if codec == "gif":
+        frames, pal = gif_codec.decode_gif(payload)
+        img = frames[0]
+    else:
+        img = (jpeg_codec.decode_jpeg(payload) if codec == "jpeg"
+               else png_codec.decode_png(payload))
+    h, w = img.shape[:2]
+    sx = (np.arange(target_w) * w) // target_w
+    sy = (np.arange(target_h) * h) // target_h
+    small = img[sy][:, sx]
+    if codec == "gif":
+        return len(gif_codec.encode_gif(small, pal))
+    if codec == "jpeg":
+        return len(jpeg_codec.encode_jpeg(small))
+    return len(png_codec.encode_png(small))
+
+
+@pytest.mark.parametrize("codec", ["png", "jpeg", "gif"])
+def test_resize_out_bytes_is_the_reencoded_length(spark, codec):
+    # the registered resize queries drop out_bytes (an entropy-coded
+    # length is not SQL-expressible), so it is pinned here instead
+    attach, resize = {
+        "png": (multimodal.attach_png_payload, multimodal.resize_png),
+        "jpeg": (multimodal.attach_jpeg_payload, multimodal.resize_jpeg),
+        "gif": (multimodal.attach_gif_payload, multimodal.resize_gif),
+    }[codec]
+    docs = spark.createDataFrame([(0,), (17,), (39,)], "doc_id bigint")
+    media = attach(docs)
+    payloads = {r.doc_id: bytes(r.payload) for r in media.collect()}
+    for target_w, target_h in ((24, 24), (16, 40)):
+        out = {r.doc_id: r.out_bytes
+               for r in resize(media, target_w, target_h).collect()}
+        assert out == {
+            d: _reencoded_len(codec, p, target_w, target_h)
+            for d, p in payloads.items()}
 
 
 def test_minhash_lsh_finds_planted_near_dups(spark):

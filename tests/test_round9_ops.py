@@ -215,8 +215,7 @@ def test_beam_search_complete_graph_equals_bruteforce(spark):
             for i in range(12)]
     df = spark.createDataFrame(
         rows, "vec_id bigint, embedding array<float>, label int")
-    exact = cosine_topk(df.filter(F.col("vec_id") < 3), df, 4,
-                        n_corpus=12)
+    exact = cosine_topk(df.filter(F.col("vec_id") < 3), df, 4)
     beam = beam_search_topk(df, k=4, n_query=3, graph_m=11,
                             beam_width=12, hops=1)
     e = sorted(map(tuple, exact.collect()))
