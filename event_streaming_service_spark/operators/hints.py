@@ -1,17 +1,16 @@
-"""Size-gated join-side hints (guide §3.1/§3.2).
+"""Size gates: join-side hints and the one-task choice (guide §3.1/§3.2).
 
 An unconditional `F.broadcast` on a frame that grows with the corpus
 is the difference between fast-at-sf0.1 and OOM-at-100TB: the explicit
 hint bypasses `spark.sql.autoBroadcastJoinThreshold`, so a query-slice
 frame that is "tiny" on the test fixture (1/125 of the corpus x
 n_probe, full vectors attached) becomes a multi-hundred-GB broadcast
-relation at the 100 TB design point (VERDICT r12 item #1). The fix is
-NOT to drop the hint — the planner's post-window/post-aggregate size
-estimates are opaque and it demonstrably picks the wrong build side
-(r12 plan audit: ivf_trained_topk broadcast the CORPUS) — but to apply
-it under an explicit size gate and degrade to a SHUFFLE_HASH hint
-above it: same join result, graceful shuffle-based execution, no 8 GB
-/ 512M-row broadcast cap in the way.
+relation at the 100 TB design point. The fix is NOT to drop the hint —
+the planner's post-window/post-aggregate size estimates are opaque and
+it can pick the wrong build side (broadcasting a corpus instead of its
+query slice) — but to apply it under an explicit size gate and degrade
+to a SHUFFLE_HASH hint above it: same join result, graceful
+shuffle-based execution, no 8 GB / 512M-row broadcast cap in the way.
 
 The estimate must cost ZERO extra Spark jobs. Two sources qualify:
 
@@ -21,14 +20,18 @@ The estimate must cost ZERO extra Spark jobs. Two sources qualify:
   keeps the child's size), so a gate fed by the BASE scan's stats
   times the operator's known fan-out (n_probe, 1/query_mod, ...)
   over-estimates and errs toward not broadcasting — the safe side.
+  A source that reports no size (Long.MAX_VALUE) never passes.
 * a row count the caller already has in hand (a connected-components
   stats byproduct, a pinned frame's materialization count).
 
-Local plans stay identical: every gated site's sf0.1 estimate is
-megabytes, far under the default 128 MB cap, so the driver bench and
-the plans/r13 dumps keep the exact BroadcastHashJoin shape the r12
-audit signed off on. The cap is parameterised for cluster deployments
-(`spark.graft.broadcast.maxBytes`), never tuned to the local fixture.
+Local plans keep their broadcast shapes: every gated site's sf0.1
+estimate is megabytes, far under the default 128 MB cap. The cap is
+parameterised for cluster deployments (`spark.graft.broadcast.maxBytes`),
+never tuned to the local fixture.
+
+`fits_one_task` reads the same estimate against its own, much smaller
+bound, `ONE_TASK_MAX_BYTES`: it decides whether a frame runs in one task
+instead of a shuffle, which is a latency question, not a memory one.
 """
 
 from __future__ import annotations
@@ -41,6 +44,15 @@ from pyspark.sql import functions as F
 ROW_OVERHEAD_BYTES = 48
 
 _DEFAULT_MAX_BYTES = 128 * 1024 * 1024
+
+# `fits_one_task` bound, in on-disk parquet bytes, from
+# tools/one_task_sweep.py on 4 cores: a 20-file consume micro-batch runs
+# as fast in one task as on the shuffle path up to about 1 MB (0.15 MB:
+# 0.61 vs 0.67 s; 0.97 MB: 0.62 vs 0.62 s; 1.85 MB: 0.81 vs 0.72 s). With
+# the shuffle path's per-byte cost scaled perfectly to 32 cores the two
+# would meet near 0.55 MB; 32 cores is unmeasured. The benchmark runs only
+# the one-task side (stream_consume's batches are 0.15 MB).
+ONE_TASK_MAX_BYTES = 512 * 1024
 
 # Local-path gate in pairs (undirected edges). The ceiling bounds the one
 # task's memory: the kernels hold a few numpy/dict entries per adjacency row.
@@ -84,6 +96,12 @@ def plan_bytes(df: DataFrame) -> int:
                    .stats().sizeInBytes())
     except Exception:
         return 1 << 62
+
+
+def fits_one_task(df: DataFrame) -> bool:
+    """True when `df`'s zero-job size estimate is at most
+    `ONE_TASK_MAX_BYTES`, so one task runs it faster than a shuffle."""
+    return plan_bytes(df) <= ONE_TASK_MAX_BYTES
 
 
 def gated_broadcast(df: DataFrame, est_bytes: float | int,

@@ -32,9 +32,9 @@ def get_spark(app_name: str = "event-streaming-spark", cpus: int | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
-        # Real Python tracebacks when an Arrow/Pandas UDF worker dies
-        # (VERDICT r10 item #1c): without these a worker crash logs
-        # only "Python worker exited unexpectedly".
+        # Real Python tracebacks when an Arrow/Pandas UDF worker dies:
+        # without these a worker crash logs only "Python worker exited
+        # unexpectedly".
         .config("spark.python.worker.faulthandler.enabled", "true")
         .config("spark.sql.execution.pyspark.udf.faulthandler.enabled", "true")
     )

@@ -8,13 +8,19 @@ Streaming micro-batches:
     W1  micro-batch trigger/size   -> trigger(processingTime) +
                                       maxFilesPerTrigger / maxOffsetsPerTrigger
     W3  late-data policy (7 days)  -> withWatermark("ts", "7 days")
-    W4  idempotency TTL (3600 s)   -> dropDuplicatesWithinWatermark, 1 h
+    W4  idempotency TTL (3600 s)   -> consume_to_tables: dedup_earliest
+                                      within ONE micro-batch (a re-send
+                                      in a later batch reaches main
+                                      again); dedup_stream:
+                                      dropDuplicatesWithinWatermark, 1 h
     W5/W6 retry + DLQ routing      -> driver-side control flow in
                                       foreachBatch (control flow, not dataflow)
     W7  progress reporting         -> StreamingQueryListener / batch metrics
     W8  windowed aggregations      -> window()/session_window() (native;
                                       batch twins in operators/windows.py)
-    W9  exactly-once               -> checkpoint + idempotent-by-batch_id sink
+    W9  exactly-once               -> checkpoint + batch_id-scoped output
+                                      dirs: replaying batch N rewrites
+                                      its own identical rows
 
 On a real deployment the source swaps to format("kafka") with
 maxOffsetsPerTrigger=500 — every transformation below is
@@ -30,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from event_streaming_service_spark.operators import hints
 from event_streaming_service_spark.operators import pipeline as batch_pipeline
 
 EVENT_SCHEMA = T.StructType([
@@ -142,41 +149,66 @@ def interval_join(left: DataFrame, right: DataFrame, key: str,
         how)
 
 
+def consume_batch(batch: DataFrame, batch_id: int, main_dir: str,
+                  dlq_dir: str, now: F.Column,
+                  process: Callable[[DataFrame], DataFrame] | None = None,
+                  ) -> None:
+    """One consume micro-batch (section 3.2):
+
+        batch -> validate -> split -> [valid: dedup -> process -> main]
+                                      [invalid: DLQ decoration -> dlq]
+
+    Both writes go to batch_id-scoped directories in overwrite mode, and
+    the survivor of each in-batch duplicate is fixed by (ts, event_id),
+    so calling this again with the same batch and batch_id rewrites
+    identical rows (W9).
+
+    A batch that `hints.fits_one_task` is coalesced to one partition:
+    the dedup window then plans no exchange, and each write is one task.
+    """
+    if hints.fits_one_task(batch):
+        batch = batch.coalesce(1)
+    valid, invalid = batch_pipeline.split_valid_invalid(
+        batch.withColumn("event_key", F.col("event_id").cast("string"))
+             .withColumn("topic", F.concat(F.lit("nnipa.events."),
+                                           F.col("event_type"))),
+        "event_key", "ts", now)
+    # deterministic first-wins (bare dropDuplicates keeps a
+    # scheduling-dependent survivor, so a replayed batch could
+    # rewrite its directory with different rows — breaking the
+    # idempotent-by-batch_id property this sink advertises)
+    out = batch_pipeline.dedup_earliest(valid, ["event_id"],
+                                        ["ts", "event_id"])
+    if process is not None:
+        out = process(out)
+    (out.write.mode("overwrite")
+        .parquet(f"{main_dir}/batch_id={batch_id}"))
+    dlq = batch_pipeline.to_dlq(invalid)
+    (dlq.write.mode("overwrite")
+        .parquet(f"{dlq_dir}/batch_id={batch_id}"))
+
+
 def consume_to_tables(stream: DataFrame, main_dir: str, dlq_dir: str,
                       checkpoint_dir: str, now_fn: Callable[[], F.Column] | None = None,
                       process: Callable[[DataFrame], DataFrame] | None = None,
                       ) -> StreamingQuery:
-    """The full consume path (section 3.2) as one foreachBatch body:
-
-        batch -> validate -> split -> [valid: dedup -> process -> main]
-                                      [invalid: DLQ decoration -> dlq]
+    """The full consume path (section 3.2): `consume_batch` as the
+    foreachBatch body of an availableNow query.
 
     Exactly-once (W9): the checkpoint tracks source progress and each
     batch writes into batch_id-scoped output directories, so a replayed
     batch overwrites its own previous (possibly partial) attempt instead
     of appending duplicates — idempotent-by-batch_id, the standard
-    foreachBatch exactly-once recipe.
+    foreachBatch exactly-once recipe. Dedup is per micro-batch: a
+    re-send that lands in a later micro-batch reaches main twice
+    (ROADMAP direction 1).
+
+    A small micro-batch runs in one task per write, with no shuffle (see
+    `consume_batch`); the main and DLQ writes each scan the batch.
     """
     def handle_batch(batch: DataFrame, batch_id: int) -> None:
         now = (now_fn() if now_fn is not None else F.current_timestamp())
-        valid, invalid = batch_pipeline.split_valid_invalid(
-            batch.withColumn("event_key", F.col("event_id").cast("string"))
-                 .withColumn("topic", F.concat(F.lit("nnipa.events."),
-                                               F.col("event_type"))),
-            "event_key", "ts", now)
-        # deterministic first-wins (bare dropDuplicates keeps a
-        # scheduling-dependent survivor, so a replayed batch could
-        # rewrite its directory with different rows — breaking the
-        # idempotent-by-batch_id property this sink advertises)
-        out = batch_pipeline.dedup_earliest(valid, ["event_id"],
-                                            ["ts", "event_id"])
-        if process is not None:
-            out = process(out)
-        (out.write.mode("overwrite")
-            .parquet(f"{main_dir}/batch_id={batch_id}"))
-        dlq = batch_pipeline.to_dlq(invalid)
-        (dlq.write.mode("overwrite")
-            .parquet(f"{dlq_dir}/batch_id={batch_id}"))
+        consume_batch(batch, batch_id, main_dir, dlq_dir, now, process)
 
     return (stream.writeStream
             .foreachBatch(handle_batch)
@@ -192,23 +224,31 @@ def retrying_sink(stream: DataFrame, out_dir: str, checkpoint_dir: str,
     """W5: retry-with-backoff as driver-side control flow. Each batch is
     attempted up to max_retries times (the reference's handler,
     BaseEventConsumer.java:209-234); rows still failing are written to
-    the retry-exhausted DLQ with their attempt count."""
+    the retry-exhausted DLQ with their attempt count. A batch that fails
+    once is pinned, so the later attempts and the DLQ write share one
+    read of the source; a batch that succeeds at once is never pinned."""
     def handle_batch(batch: DataFrame, batch_id: int) -> None:
-        remaining = batch
-        for attempt in range(max_retries + 1):
-            try:
-                result = attempt_fn(remaining, attempt)
-                result.write.mode("overwrite").parquet(
-                    f"{out_dir}/batch_id={batch_id}")
-                return
-            except Exception:
-                if attempt >= max_retries:
-                    (remaining.withColumn("exhausted_after", F.lit(attempt))
-                     .write.mode("overwrite")
-                     .parquet(f"{out_dir}/dlq/batch_id={batch_id}"))
+        try:
+            for attempt in range(max_retries + 1):
+                try:
+                    result = attempt_fn(batch, attempt)
+                    result.write.mode("overwrite").parquet(
+                        f"{out_dir}/batch_id={batch_id}")
                     return
-                # backoff between attempts mirrors backoff_ms; in local
-                # tests the delay is skipped (control flow is the point)
+                except Exception:
+                    if attempt >= max_retries:
+                        (batch.withColumn("exhausted_after", F.lit(attempt))
+                         .write.mode("overwrite")
+                         .parquet(f"{out_dir}/dlq/batch_id={batch_id}"))
+                        return
+                    if not batch.is_cached:
+                        batch.persist()
+                    # backoff between attempts mirrors backoff_ms; in
+                    # local tests the delay is skipped (control flow is
+                    # the point)
+        finally:
+            if batch.is_cached:
+                batch.unpersist()
 
     return (stream.writeStream.foreachBatch(handle_batch)
             .option("checkpointLocation", checkpoint_dir)

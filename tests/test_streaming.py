@@ -4,12 +4,14 @@ exactly-once replays."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
+from event_streaming_service_spark.operators import hints
 from event_streaming_service_spark.sources import tables
 from event_streaming_service_spark.streaming import pipeline as sp
 
@@ -116,6 +118,153 @@ def test_retrying_sink_exhausts_to_dlq(spark, tmpdir):
     dlq = spark.read.parquet(f"{out}/dlq")
     rows = dlq.collect()
     assert len(rows) == 1 and rows[0].exhausted_after == 2
+
+
+def test_retrying_sink_pins_after_first_failure(spark, tmpdir):
+    # attempts 0 and 1 each read the batch and fail, attempt 2 succeeds:
+    # the pin taken after attempt 0 serves attempt 2's read and write, so
+    # a counting UDF sees every row twice (4 times without the pin)
+    from pyspark.sql.types import LongType
+
+    src = f"{tmpdir}/rsrc"
+    spark.range(1, 6).select(
+        F.col("id").alias("event_id"),
+        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("ts"),
+        F.lit(1).cast("long").alias("user_id"),
+        F.lit("view").alias("event_type"), F.lit(1.0).alias("value"),
+        F.lit("{}").alias("props")).coalesce(1) \
+        .write.mode("overwrite").parquet(src)
+    reads = spark.sparkContext.accumulator(0)
+
+    def seen(v):
+        reads.add(1)
+        return v
+
+    def fail_twice(df, attempt):
+        out = df.select("*")  # a new plan, so it can read the pin
+        out.collect()
+        if attempt < 2:
+            raise RuntimeError(f"attempt {attempt}")
+        return out
+
+    stream = sp.read_event_stream(spark, src).withColumn(
+        "event_id", F.udf(seen, LongType())("event_id"))
+    out, ckpt = f"{tmpdir}/out", f"{tmpdir}/rckpt"
+    pinned = spark.sparkContext._jsc.getPersistentRDDs().size()
+    q = sp.retrying_sink(stream, out, ckpt, fail_twice, max_retries=2)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert reads.value == 2 * 5, reads.value
+    ids = [r.event_id for r in spark.read.parquet(out).collect()]
+    assert sorted(ids) == [1, 2, 3, 4, 5]
+    assert not os.path.exists(f"{out}/dlq")
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == pinned
+
+
+def _now():
+    return F.lit("2024-02-03 00:00:00").cast("timestamp")
+
+
+def _consumed(spark, main, dlq):
+    m, d = spark.read.parquet(main), spark.read.parquet(dlq)
+    return (sorted(m.collect(), key=repr), sorted(d.collect(), key=repr),
+            m.schema.simpleString(), d.schema.simpleString())
+
+
+def test_consume_batch_semantics_and_replay(spark, tmpdir):
+    """An in-batch re-send keeps its earliest copy, a NULL id and a
+    stale row go to the DLQ, and replaying the batch_id rewrites
+    identical rows (W9)."""
+    batch = spark.createDataFrame(
+        [(1, "2024-02-02 10:00:00", 7, "view", 1.0, "{}"),
+         (1, "2024-02-02 09:00:00", 7, "view", 2.0, "{}"),   # earlier copy
+         (None, "2024-02-02 10:00:00", 7, "click", 1.0, "{}"),
+         (2, "2024-01-01 00:00:00", 7, "purchase", 1.0, "{}"),  # > 7 days
+         (3, "2024-02-02 11:00:00", 8, "click", 3.0, "{}")],
+        "event_id long, ts string, user_id long, event_type string, "
+        "value double, props string") \
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+    main, dlq = f"{tmpdir}/main", f"{tmpdir}/dlq"
+    sp.consume_batch(batch, 0, main, dlq, _now())
+    first = _consumed(spark, main, dlq)
+    m, d = first[0], first[1]
+    assert [(r.event_id, str(r.ts), r.value) for r in m] == [
+        (1, "2024-02-02 09:00:00", 2.0), (3, "2024-02-02 11:00:00", 3.0)]
+    assert sorted((r.reject_reason, r.event_id, r.dlq_topic) for r in d
+                  ) == [("missing_event_id", None, "nnipa.dlq.click"),
+                        ("stale_event", 2, "nnipa.dlq.purchase")]
+
+    sp.consume_batch(batch, 0, main, dlq, _now())
+    assert _consumed(spark, main, dlq) == first
+    assert os.listdir(main) == ["batch_id=0"]
+
+
+def _multi_file_batch(spark, sf_smoke, tmpdir):
+    # four files (four scan partitions) holding in-batch re-sends and
+    # stale rows
+    ev = tables.load_table(spark, sf_smoke, "events")
+    ev.union(ev.limit(40)).repartition(4).write.parquet(f"{tmpdir}/src")
+    return spark.read.schema(sp.EVENT_SCHEMA).parquet(f"{tmpdir}/src")
+
+
+def test_consume_batch_gate_boundary_parity(spark, sf_smoke, tmpdir,
+                                            monkeypatch):
+    batch = _multi_file_batch(spark, sf_smoke, tmpdir)
+    size = hints.plan_bytes(batch)
+    got = {}
+    for cap in (size, size - 1):
+        monkeypatch.setattr(hints, "ONE_TASK_MAX_BYTES", cap)
+        assert hints.fits_one_task(batch) == (cap == size)
+        sp.consume_batch(batch, 0, f"{tmpdir}/{cap}/main",
+                         f"{tmpdir}/{cap}/dlq", _now())
+        got[cap] = _consumed(spark, f"{tmpdir}/{cap}/main",
+                             f"{tmpdir}/{cap}/dlq")
+    assert got[size] == got[size - 1]
+    assert got[size][0] and got[size][1]
+
+
+def _consume_cost(spark, batch, out, tag):
+    sc = spark.sparkContext
+    group = f"consume-cost-{tag}"
+    sc.setJobGroup(group, tag)
+    try:
+        sp.consume_batch(batch, 0, f"{out}/main", f"{out}/dlq", _now())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    tasks = sum(st.getStageInfo(s).numCompletedTasks
+                for j in jobs for s in st.getJobInfo(j).stageIds)
+    dlq_files = [f for f in os.listdir(f"{out}/dlq/batch_id=0")
+                 if f.endswith(".parquet")]
+    return len(jobs), tasks, len(dlq_files)
+
+
+# One single-task job each for the main write and the DLQ write. Gate 0
+# (the shuffle path) at its measured cost on this 4-file batch: the dedup
+# window's shuffle map (4 tasks), the main write's AQE-coalesced reduce
+# (1) and the DLQ write (4).
+def test_consume_batch_job_count(spark, sf_smoke, tmpdir, monkeypatch):
+    batch = _multi_file_batch(spark, sf_smoke, tmpdir)
+    cost = _consume_cost(spark, batch, f"{tmpdir}/d", "default")
+    assert cost == (2, 2, 1), cost
+    monkeypatch.setattr(hints, "ONE_TASK_MAX_BYTES", 0)
+    cost = _consume_cost(spark, batch, f"{tmpdir}/z", "gate0")
+    assert cost[0] <= 3 and cost[1] <= 9, cost
+
+
+def test_rate_micro_batch_stays_distributed(spark, tmpdir):
+    # a DSv2 source that reports no size (Long.MAX_VALUE) never takes
+    # the one-task path
+    seen = []
+    q = (spark.readStream.format("rate-micro-batch")
+         .option("rowsPerBatch", 10).load()
+         .writeStream.foreachBatch(
+             lambda df, _: seen.append(hints.fits_one_task(df)))
+         .option("checkpointLocation", f"{tmpdir}/rckpt")
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    assert seen and not any(seen)
 
 
 def test_session_counts_stream_runs(spark, sf_smoke, tmpdir):

@@ -36,7 +36,7 @@ MODULE_COVERAGE = {
     "W3": "streaming/pipeline.py:with_late_data_policy (7-day watermark)",
     "W4": "dedup_stream + stateful.dedup_with_ttl (tests/test_stateful.py)",
     "W7": "NOT in the engine: no engine code reads a streaming query's lastProgress/recentProgress; only the benchmark harness does (perfbench/workloads.py). Engine-side progress reporting is ROADMAP direction 4",
-    "W9": "consume_to_tables idempotent-by-batch_id (tests: exactly-once on restart)",
+    "W9": "consume_to_tables idempotent-by-batch_id: replaying a batch rewrites identical rows (tests/test_streaming.py: test_consume_batch_semantics_and_replay, test_consume_exactly_once_on_restart)",
     "2.11": "foreachBatch process hooks + Arrow-batched mapInPandas media kernels (operators/multimodal.py: every codec operator runs through _encode_each or _decode_each) — UDF surface",
 }
 
